@@ -336,7 +336,7 @@ def check_spans(result, cores, problems):
 
 def check(workload, plan, expect, result, work, root, cores, refresh=False):
     problems, bad_ops = [], set()
-    ops = [o for o in result["ops"] if o.get("timed", True)]
+    ops = result["ops"]
     if workload == "deloton-ingest-serve":
         check_deloton(plan, expect, result, work, problems, bad_ops)
         attempted = len(ops) + len(result.get("steps", {}))

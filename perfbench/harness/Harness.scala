@@ -128,6 +128,7 @@ final class Harness(plan: JsonNode) {
 
   def run(): Unit = {
     Files.createDirectories(work)
+    Heap.watch()
     val t0 = now()
     spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -148,17 +149,15 @@ final class Harness(plan: JsonNode) {
     out.put("calib_start_s", calibrate("start"))
     workload match {
       case "corpus-cold" => corpusCold()
-      case "relational-warm" => relationalWarm()
       case "deloton-ingest-serve" => delotonIngestServe()
     }
-    if (workload != "deloton-ingest-serve") inputScan()
     out.put("calib_end_s", calibrate("end"))
     out.put("first_op_epoch_ms", epochMs(firstOpNs))
     val captureNs = captures.map { case (a, b) =>
       math.max(0L, math.min(b, lastResultNs) - math.max(a, firstOpNs)) }.sum
     out.put("wall_s", secs(lastResultNs - firstOpNs - captureNs))
     out.put("capture_s", secs(captureNs))
-    out.put("heap_peak_bytes", Heap.peakLiveBytes)
+    out.put("heap_peak_bytes", Heap.peakAfterGcBytes)
     out.put("gc_ms", Heap.gcMs)
     val oracle = out.putObject("oracle_sql")
     val keys = plan.path("keys").elements().asScala.map(_.asText).toSet
@@ -199,24 +198,22 @@ final class Harness(plan: JsonNode) {
     plan.path("modules").fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
 
   /** One declared query: construction, planning, full materialisation. */
-  private def queryOp(s: SparkSession, key: String, round: Int, timed: Boolean,
-      dump: Option[Path]): Unit = {
+  private def queryOp(s: SparkSession, key: String, round: Int, dump: Option[Path]): Unit = {
     val fn = SparkEntry.queries(key)
     val op = s"$key#$round"
-    val prefix = if (timed) "" else "u:"
     val rec = nf.objectNode()
     rec.put("kind", "query").put("key", key).put("module", moduleOf.getOrElse(key, "?"))
-      .put("round", round).put("timed", timed)
+      .put("round", round)
     val t0 = now()
     var t1, t2, t3 = t0
     var rows: Array[Row] = null
     var schema: org.apache.spark.sql.types.StructType = null
     try {
-      val df = span(s"${prefix}construct|$op", op)(fn(s, dataDir))
+      val df = span(s"construct|$op", op)(fn(s, dataDir))
       t1 = now()
-      span(s"${prefix}plan|$op", op)(df.queryExecution.executedPlan)
+      span(s"plan|$op", op)(df.queryExecution.executedPlan)
       t2 = now()
-      rows = span(s"${prefix}exec|$op", op)(df.collect())
+      rows = span(s"exec|$op", op)(df.collect())
       t3 = now()
       schema = df.schema
     } catch {
@@ -226,7 +223,7 @@ final class Harness(plan: JsonNode) {
     }
     rec.put("construct_s", secs(t1 - t0)).put("plan_s", secs(t2 - t1))
       .put("exec_s", secs(t3 - t2)).put("total_s", secs(t3 - t0))
-    if (timed) measured(t0, t3)
+    measured(t0, t3)
     System.err.println(f"[perfbench] $op%-40s ${secs(t3 - t0)}%8.3f s")
     captured {
       if (rows != null) {
@@ -241,7 +238,6 @@ final class Harness(plan: JsonNode) {
           Files.write(p, (mapper.writeValueAsString(header) +: ls.toSeq).asJava)
         }
       }
-      Heap.sample()
     }
     ops.add(rec)
   }
@@ -279,40 +275,12 @@ final class Harness(plan: JsonNode) {
       val s = spark.newSession()
       val dir = work.resolve(s"staging-$r")
       s.conf.set("spark.graft.stagingDir", dir.toString)
-      keys.foreach(k => queryOp(s, k, r, timed = true, if (r == 0) dumpPath(k) else None))
+      keys.foreach(k => queryOp(s, k, r, if (r == 0) dumpPath(k) else None))
       val (families, files, bytes) = stagingStats(dir)
       staging.addObject().put("families", families).put("files", files).put("bytes", bytes)
       graft.ops.Similarity.evictStagedSession(s)
       deleteTree(dir)
     }
-  }
-
-  /** Untimed warm-up passes, then timed passes in the seeded orders. */
-  private def relationalWarm(): Unit = {
-    val keys = keysOf("keys")
-    val tw = now()
-    for (w <- 0 until plan.get("warm_passes").asInt)
-      keys.foreach(k => queryOp(spark, k, -1 - w, timed = false, if (w == 0) dumpPath(k) else None))
-    out.put("warmup_s", secs(now() - tw))
-    plan.get("timed_orders").elements().asScala.zipWithIndex.foreach { case (order, r) =>
-      order.elements().asScala.foreach(k => queryOp(spark, k.asText, r, timed = true, None))
-    }
-  }
-
-  /** The query workloads' ingest figure: one full read of every input table. */
-  private def inputScan(): Unit = {
-    val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings")
-    Heap.sample()
-    val times = (0 until plan.path("scan_reps").asInt(5)).map { _ =>
-      span("u:input-scan") {
-        val t0 = now()
-        tables.foreach(t => spark.read.parquet(s"$dataDir/$t.parquet").queryExecution.toRdd.count())
-        secs(now() - t0)
-      }
-    }
-    val a = out.putArray("input_scan_s")
-    times.foreach(a.add(_))
   }
 
   // --------------------------------------------------- deloton ingest and serve
@@ -326,7 +294,6 @@ final class Harness(plan: JsonNode) {
     val t1 = now()
     measured(t0, t1)
     steps.put(name, secs(t1 - t0))
-    captured(Heap.sample())
     r
   }
 
@@ -338,26 +305,29 @@ final class Harness(plan: JsonNode) {
     val ridesPath = tables.resolve("rides").toString
     val scans = out.putArray("logsource_scans")
 
-    // every column of every line, so the source cannot prune its work away
-    def scan(batch: String, dir: String): Unit = {
-      val r = step(s"logsource.scan|$batch", batch) {
+    // LogSource on its own, for the line-count check and its layer figures:
+    // every column of every line, so the source cannot prune its work away.
+    // The product path never makes this scan, so it stays out of the
+    // measured time and counters.
+    def scan(batch: String, dir: String): Unit = captured {
+      val t0 = now()
+      val r = span(s"u:logsource.scan|$batch", batch) {
         DelotonPipeline.readLogs(spark, dir)
           .agg(count(lit(1)), sum(length(col("value"))), sum(col("offset")),
             sum(length(col("stream")))).collect().head
       }
-      scans.addObject().put("batch", batch).put("rows", r.getLong(0))
+      scans.addObject().put("batch", batch).put("rows", r.getLong(0)).put("seconds", secs(now() - t0))
     }
 
     val b1 = logs.get("batch1").asText
     val b2 = logs.get("batch2").asText
-    scan("b1", b1)
     step("pipeline.users|b1", "b1")(
       DelotonPipeline.users(DelotonPipeline.readLogs(spark, b1)).write.parquet(usersPath))
     step("pipeline.rides|b1", "b1")(
       DelotonPipeline.rides(DelotonPipeline.readLogs(spark, b1)).write.parquet(ridesPath))
+    scan("b1", b1)
     captured(warmEndpoints(usersPath, ridesPath))
     serve("serve1", usersPath, ridesPath)
-    scan("b2", b2)
     step("pipeline.upsert|b2", "b2") {
       val existing = spark.read.parquet(usersPath)
       DelotonPipeline.upsertNew(DelotonPipeline.users(DelotonPipeline.readLogs(spark, b2)),
@@ -365,6 +335,7 @@ final class Harness(plan: JsonNode) {
     }
     step("pipeline.rides|b2", "b2")(
       DelotonPipeline.rides(DelotonPipeline.readLogs(spark, b2)).write.mode("append").parquet(ridesPath))
+    scan("b2", b2)
     serve("serve2", usersPath, ridesPath)
     // the written tables, for the conservation checks
     captured {
@@ -429,10 +400,7 @@ final class Harness(plan: JsonNode) {
         responses.add(mapper.writeValueAsString(a))
       }
     }
-    captured {
-      Files.write(work.resolve(s"$phase.jsonl"), responses)
-      Heap.sample()
-    }
+    captured(Files.write(work.resolve(s"$phase.jsonl"), responses))
   }
 
   private def endpoint(fn: String, req: JsonNode, users: DataFrame, rides: DataFrame): DataFrame = {

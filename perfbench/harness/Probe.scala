@@ -1,9 +1,13 @@
 package perfbench
 
-import java.lang.management.ManagementFactory
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import javax.management.{Notification, NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
 import scala.jdk.CollectionConverters._
+
+import com.sun.management.GarbageCollectionNotificationInfo
 
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.scheduler._
@@ -41,8 +45,9 @@ final class Counters {
   * from broadcast and subquery threads on its behalf, so work a call
   * triggers indirectly still lands in the caller's span.
   *
-  * Span names that start with `u:` mark unmeasured work (warm-up,
-  * calibration, output capture); everything else adds to `total`.
+  * Span names that start with `u:` mark unmeasured work (calibration,
+  * endpoint warm-up, output capture, the LogSource check scans);
+  * everything else adds to `total`.
   */
 final class Probe(perSpan: Boolean) extends SparkListener {
   val total = new Counters
@@ -73,18 +78,32 @@ object Probe {
 }
 
 /** JVM-wide garbage collection figures: total collection time, and the
-  * largest live heap seen at the points the harness samples it.
+  * largest heap still in use after any collection the JVM makes on its own.
+  * The harness never forces a collection, so the figure follows the
+  * garbage an operation leaves behind as a normal run does.
   */
 object Heap {
-  private var peak = 0L
+  private val peak = new AtomicLong
+  private lazy val heapPools: Set[String] = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
 
-  /** Collect, then record the heap still in use: the live set at this point. */
-  def sample(): Unit = {
-    System.gc()
-    peak = math.max(peak, ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
+  private val listener = new NotificationListener {
+    override def handleNotification(n: Notification, handback: Any): Unit =
+      if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+        val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+        val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+          .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+        peak.accumulateAndGet(used, math.max)
+      }
   }
 
-  def peakLiveBytes: Long = peak
+  /** Record the heap in use after every collection from now on. */
+  def watch(): Unit = ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+    case e: NotificationEmitter => e.addNotificationListener(listener, null, null)
+    case _ =>
+  }
+
+  def peakAfterGcBytes: Long = peak.get
 
   def gcMs: Long = ManagementFactory.getGarbageCollectorMXBeans.asScala
     .map(_.getCollectionTime).filter(_ > 0).sum

@@ -4,11 +4,11 @@ End-to-end metrics come from untraced runs; per-layer metrics from traced
 runs, whose spans carry the listener's counters. Names and units are those
 of BENCHMARK.json.
 """
+import math
 import statistics
 
 MB = 1e6
-MODULES = ("Similarity", "Sketches", "CorpusPrep", "TextOps", "TrainingData",
-           "Relational", "Events", "Analytics", "Temporal", "Audit", "Storage")
+MODULES = ("Similarity", "Sketches", "CorpusPrep", "TextOps", "TrainingData", "Audit")
 DENSE_KEYS = ("q115_knn_label", "q31_embed_neardup", "q25_minhash_neardup",
               "q157_cross_source_dups", "q219_dedup_degree_hist", "q178_merkle_manifest",
               "q174_join_skew_audit")
@@ -18,13 +18,12 @@ ENDPOINTS = ("ride_by_id", "riders", "rider_by_id", "riders_by_gender", "riders_
              "rides_by_gender", "rides_for_rider", "daily")
 
 END_TO_END = {
-    "setup_s": "s", "wall_s": "s", "op_p50_ms": "ms", "op_tail_ms": "ms", "ingest_s": "s",
-    "task_cpu_s": "s", "shuffle_mb": "MB", "heap_peak_mb": "MB",
+    "setup_s": "s", "wall_s": "s", "op_p50_ms": "ms", "op_tail_ms": "ms", "task_cpu_s": "s", "shuffle_mb": "MB", "heap_peak_mb": "MB",
 }
 
 
 def per_layer_units():
-    units = {"setup.session_s": "s", "setup.warmup_s": "s", "construct_s": "s"}
+    units = {"setup.session_s": "s", "construct_s": "s"}
     units.update({f"construct_s.{m}": "s" for m in MODULES})
     units.update({"staging.families": "count", "staging.files": "count", "staging.mb": "MB",
                   "plan_s": "s", "jobs": "count", "stages": "count", "tasks": "count",
@@ -49,15 +48,27 @@ def per_layer_units():
 PER_LAYER = per_layer_units()
 
 
-def tail_rank(n):
-    """Index, in ascending order, of the tail sample: the highest percentile
-    with at least ten samples beyond it. Below forty samples that percentile
-    is no tail, so the slowest operation stands in for it."""
-    return n - 11 if n >= 40 else n - 1
+def hd_quantile(values, p, grid=20000):
+    """The Harrell-Davis estimate of the p-quantile: the mean of all order
+    statistics, each weighted by the Beta((n+1)p, (n+1)(1-p)) mass of its
+    share of (0, 1]. On a few dozen samples it is much steadier than the
+    single order statistic at that rank."""
+    xs = sorted(values)
+    n = len(xs)
+    a, b = p * (n + 1), (1 - p) * (n + 1)
+    w = [0.0] * n
+    for j in range(grid):  # midpoint rule over the Beta density
+        t = (j + 0.5) / grid
+        w[min(n - 1, int(t * n))] += math.exp((a - 1) * math.log(t) + (b - 1) * math.log1p(-t))
+    return sum(wi * x for wi, x in zip(w, xs)) / sum(w)
 
 
-def timed_ops(result):
-    return [o for o in result["ops"] if o.get("timed", True)]
+def tail_latency(values):
+    """The highest percentile with at least ten samples beyond it. Below
+    forty samples that percentile is no tail, so p90 stands in for it: the
+    estimate then weights the slowest few operations."""
+    n = len(values)
+    return hd_quantile(values, (n - 10) / n if n >= 40 else 0.9)
 
 
 def read_steal():
@@ -76,21 +87,15 @@ def steal_pct(before, after):
 
 
 def compute(workload, result, launch_s, cores, traced, steal):
-    ops = timed_ops(result)
+    ops = result["ops"]
     if not traced:
-        lat = sorted(o["total_s"] * 1000 for o in ops)
-        steps = result.get("steps", {})
-        if workload == "deloton-ingest-serve":
-            ingest = sum(v for k, v in steps.items() if k.startswith("pipeline."))
-        else:
-            ingest = statistics.median(result["input_scan_s"])
+        lat = [o["total_s"] * 1000 for o in ops]
         total = result["total"]
         values = {
             "setup_s": result["first_op_epoch_ms"] / 1000 - launch_s,
             "wall_s": result["wall_s"],
-            "op_p50_ms": statistics.median(lat),
-            "op_tail_ms": lat[tail_rank(len(lat))],
-            "ingest_s": ingest,
+            "op_p50_ms": hd_quantile(lat, 0.5),
+            "op_tail_ms": tail_latency(lat),
             "task_cpu_s": total["cpu_ns"] / 1e9,
             "shuffle_mb": total["shuffle_write_bytes"] / MB,
             "heap_peak_mb": result["heap_peak_bytes"] / MB,
@@ -111,7 +116,6 @@ def compute(workload, result, launch_s, cores, traced, steal):
 
     total = result["total"]
     values["setup.session_s"] = result["session_s"]
-    values["setup.warmup_s"] = result.get("warmup_s", 0.0)
     queries = [o for o in ops if o["kind"] == "query"]
     values["construct_s"] = sum(o["construct_s"] for o in queries)
     values["plan_s"] = sum(o["plan_s"] for o in queries)
@@ -145,10 +149,12 @@ def compute(workload, result, launch_s, cores, traced, steal):
     steps = result.get("steps", {})
     requests = [o for o in ops if o["kind"] == "request"]
     if workload == "deloton-ingest-serve":
-        values["logsource.scan_s"] = sum(v for k, v in steps.items() if k.startswith("logsource."))
-        values["logsource.rows"] = sum(s["rows"] for s in result["logsource_scans"])
-        values["logsource.tasks"] = summed(lambda n: n.startswith("logsource."), "tasks")
-        values["logsource.max_task_s"] = maxed(lambda n: n.startswith("logsource."))
+        scans = result["logsource_scans"]
+        logsource = [c for name, c in counters.items() if name.startswith("u:logsource.")]
+        values["logsource.scan_s"] = sum(s["seconds"] for s in scans)
+        values["logsource.rows"] = sum(s["rows"] for s in scans)
+        values["logsource.tasks"] = sum(c["tasks"] for c in logsource)
+        values["logsource.max_task_s"] = max([c["max_task_ms"] for c in logsource] or [0]) / 1000
         values["pipeline.users_s"] = steps.get("pipeline.users|b1", 0.0)
         values["pipeline.rides_s"] = sum(v for k, v in steps.items()
                                          if k.startswith("pipeline.rides"))
@@ -158,7 +164,7 @@ def compute(workload, result, launch_s, cores, traced, steal):
         values["pipeline.max_task_s"] = maxed(lambda n: n.startswith("pipeline."))
         for f in ENDPOINTS:
             lat = [o["total_s"] * 1000 for o in requests if o["fn"] == f]
-            values[f"endpoint.{f}.p50_ms"] = statistics.median(lat) if lat else 0.0
+            values[f"endpoint.{f}.p50_ms"] = hd_quantile(lat, 0.5) if lat else 0.0
         values["endpoint.json_s"] = sum(o["json_s"] for o in requests)
         values["endpoint.jobs"] = summed(lambda n: n.startswith("endpoint."), "jobs")
         windows = [(o["start_ms"], o["end_ms"]) for o in requests]

@@ -32,6 +32,10 @@ import workloads  # noqa: E402
 
 CORES = 4
 HEAP = "2g"
+# A fixed young generation: with G1's adaptive sizing eden grows to most of
+# the heap, a run makes only a handful of collections, and the heap in use
+# after a collection (heap_peak_mb) is the largest of a few random samples.
+YOUNG = "256m"
 JVM_TIMEOUT_S = 150  # a run, checks included, must end within 180 s
 
 
@@ -39,7 +43,7 @@ def jvm_command(root, work, plan_path):
     opens = [a for p in build.JDK_OPENS for a in ("--add-opens", f"{p}=ALL-UNNAMED")]
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+UseG1GC",
+    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Xmn{YOUNG}", "-XX:+UseG1GC",
              f"-XX:ActiveProcessorCount={CORES}", "-Duser.timezone=UTC",
              f"-Djava.io.tmpdir={tmp}"] + opens +
             ["-cp", build.classpath(root), "perfbench.Harness", plan_path])

@@ -22,28 +22,24 @@ def declared_keys(root):
     return keys
 
 
-# The keys each query workload runs. One run must fit its share of the
-# benchmark's time budget (about 40 s, set-up and checks included), and a
-# cold pass over every declared key takes minutes (232 s for the 128 corpus
-# keys on 4 cores), so each workload runs a fixed selection: keys ROADMAP
-# names as dense kernels, stragglers and job-floor keys, plus cheap keys
-# that put every ops module of the workload in the run.
+# The keys the query workload runs. One run must fit its share of the
+# benchmark's time budget, and a cold pass over every declared key takes
+# minutes (232 s for the 128 corpus keys on 4 cores), so it runs a fixed
+# selection: the keys ROADMAP names as dense kernels, stragglers and
+# job-floor keys (the four Audit keys among them), plus cheap keys that put
+# every corpus ops module in the run.
 CORPUS_KEYS = (
     "q115_knn_label", "q31_embed_neardup", "q25_minhash_neardup", "q157_cross_source_dups",
     "q219_dedup_degree_hist", "q62b_dedup_clusters_star", "q213_blockmax_wand",
     "q226_query_expansion",
+    "q178_merkle_manifest", "q174_join_skew_audit", "q169_dq_audit", "q182_join_cardinality",
     "q67_corpus_prep", "q63_pii_scrub", "q27_lang_id", "q24_multimodal_cols", "q64_chunk",
-)
-RELATIONAL_KEYS = (
-    "q178_merkle_manifest", "q182_join_cardinality",
-    "q01_scan_project_filter", "q04c_count_distinct", "q13_sessionize",
-    "q40_correlated_subquery", "q45_cube", "q42_asof_join",
 )
 
 
 class CorpusCold:
-    """The corpus keys once per round, in a fixed order, each round in a new
-    session whose staging directory starts empty."""
+    """The selected keys once per round, in a fixed order, each round in a
+    new session whose staging directory starts empty."""
     round_seconds = 30
 
     def prepare(self, work, seed, seconds, rng):
@@ -53,26 +49,6 @@ class CorpusCold:
         gen.write_tables(data, seed)
         plan = {"data": data, "keys": keys, "rounds": max(1, seconds // self.round_seconds),
                 "modules": {k: modules[k] for k in keys}}
-        return plan, {}
-
-
-class RelationalWarm:
-    """The relational keys: one untimed warm-up pass, then timed passes, each
-    in an order drawn from the seed."""
-    pass_seconds = 15
-
-    def prepare(self, work, seed, seconds, rng):
-        modules = declared_keys(os.getcwd())
-        keys = sorted(RELATIONAL_KEYS)
-        data = os.path.join(work, "data")
-        gen.write_tables(data, seed)
-        orders = []
-        for _ in range(max(1, seconds // self.pass_seconds)):
-            order = list(keys)
-            rng.shuffle(order)
-            orders.append(order)
-        plan = {"data": data, "keys": keys, "warm_passes": 1,
-                "timed_orders": orders, "modules": {k: modules[k] for k in keys}}
         return plan, {}
 
 
@@ -130,6 +106,5 @@ def request_mix(rng, user_ids, n):
 
 ALL = {
     "corpus-cold": CorpusCold(),
-    "relational-warm": RelationalWarm(),
     "deloton-ingest-serve": DelotonIngestServe(),
 }
