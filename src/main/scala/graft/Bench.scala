@@ -28,6 +28,23 @@ object Bench {
     }
   }
 
+  /** The compact line's `queries` entries: `"name":seconds`, slowest
+    * first, stopping at the first entry that does not fit `budget` chars
+    * (each entry counted with its separating comma) — so the published
+    * entries are always exactly the N slowest queries, never a slowest
+    * prefix with later, shorter-named keys filling the gaps.
+    */
+  private[graft] def slowestFirstPrefix(times: Seq[(String, Double)], budget: Int): Seq[String] = {
+    val entries = times.sortBy { case (k, v) => (-v, k) }.map { case (k, v) => JsonStr(k) + f":$v%.3f" }
+    val used = entries.scanLeft(0)(_ + _.length + 1).tail
+    entries.zip(used).takeWhile(_._2 <= budget).map(_._1)
+  }
+
+  /** The checkout's commit, or "unknown" outside a git work tree. */
+  private def gitSha(): String =
+    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD")).!!.trim)
+      .filter(_.matches("[0-9a-f]{40}")).getOrElse("unknown")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -98,7 +115,10 @@ object Bench {
       // partial duration is not a measurement of the query, and letting
       // it into the min would publish a bogus short time for a query
       // that crashed on one rep and succeeded on another.
-      val ok = try { fn(spark, sfDir).count(); true } catch {
+      // The noop sink executes the whole plan without collecting it; a
+      // count() would let Catalyst prune the query's projections, regex
+      // passes and sort away.
+      val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true } catch {
         case e: Throwable =>
           if (recordFailure && !failed.contains(name)) failed += name
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -206,7 +226,8 @@ object Bench {
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fails,""" +
       f""""rep_spread":$spreadJson,"median_spread":$medianSpread%.3f,"host_loaded":$hostLoaded,""" +
-      s""""movers_isolated":$moverJson,"sf":${jstr(sfDir)}}"""
+      s""""movers_isolated":$moverJson,"sf":${jstr(sfDir)},""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},"git_sha":${jstr(gitSha())}}"""
     // stdout for humans; the file for the driver — sbt prefixes stdout
     // lines with [info], which broke machine parsing of round 1's metric.
     println(json)
@@ -242,13 +263,7 @@ object Bench {
       f""""median_spread":$medianSpread%.3f,"host_loaded":$hostLoaded,""" +
       s""""sf":${jstr(sfDir)},"note":"queries=slowest-first, as many as fit the tail window; full per-query map in BENCH_FULL_latest.json"}"""
     val lineBudget = 1900 - fixedHead.length - fixedTail.length
-    val slowestEntries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var usedChars = 0
-    for (e <- results.toSeq.sortBy(-_._2).map { case (k, v) => jstr(k) + f":$v%.3f" }
-         if usedChars + e.length + 1 <= lineBudget) {
-      slowestEntries += e; usedChars += e.length + 1
-    }
-    println(fixedHead + slowestEntries.mkString(",") + fixedTail)
+    println(fixedHead + slowestFirstPrefix(results.toSeq, lineBudget).mkString(",") + fixedTail)
     spark.stop()
   }
 }

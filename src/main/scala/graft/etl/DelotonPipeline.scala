@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
   *  - `existing_user` first-wins set
   *    (main.py:85,131-132)                      → row_number over user window (J6)
   *  - `sql_list[1:-1]` boundary trim
-  *    (main.py:175)                             → min/max ride_id anti-filter (A4)
+  *    (main.py:175)                             → per-stream min/max ride_id window (A4)
   *
   * INTENDED semantics are implemented, not the reference's bugs
   * (SURVEY.md §4.3): per-ride averages use real samples only (not
@@ -28,10 +28,21 @@ import org.apache.spark.sql.types._
   * min(ts) (not the 2nd collected value, main.py:171); ages are
   * anchored to the batch's max timestamp, never wall clock.
   *
-  * Scale: the log is partitioned by `stream` (bike/source id — the
-  * Kafka partition key) and every window partitions by it, so state
-  * never crosses executors and no global ordering is required. The
+  * Scale: every window and the per-ride aggregate partition by `stream`
+  * (bike/source id — the Kafka partition key), so `rides` is one scan
+  * and one exchange, `hashpartitioning(stream)`; each stream's lines
+  * then meet in one task and no global ordering is required. The line
+  * fields are extracted before that exchange, which therefore carries
+  * `stream` and a few numbers per line, never the message text. The
   * reference's whole-topic-in-memory drain (main.py:47) disappears.
+  *
+  * The source does not report its files as a `KeyGroupedPartitioning`
+  * by `stream`, though that would remove the exchange: measured on the
+  * deloton-ingest-serve benchmark, it cut shuffle bytes from 0.46 to
+  * 0.02 MB but wrote `rides` as 12 files per batch (one task per
+  * stream), raised the peak heap from 151 to about 280 MB (four
+  * concurrent per-stream tasks, each holding its own sort and aggregate
+  * pages) and the median request latency by about 40%.
   */
 object DelotonPipeline {
 
@@ -47,16 +58,24 @@ object DelotonPipeline {
   private val honorifics = "^(Mr|Ms|Dr|Mrs|Miss)\\s+" // main.py:75 stop_words
   private val numberRx = "\\d+\\.?\\d*" // main.py:74 numbers_regex
 
+  private val line = col("log")
+  // line-type predicates and the line timestamp, one definition for both tables
+  private val isMarker = line.contains("--------- beginning of a new ride")
+  private val isUser = line.contains("data = ")
+  private val isRide = line.contains("Ride - ")
+  private val isTelemetry = line.contains("Telemetry -")
+  private val lineTs = to_timestamp(substring(line, 1, 23), "yyyy-MM-dd HH:mm:ss.SSS")
+
   private def field(name: String): Column = // python-dict literal field
-    regexp_extract(col("log"), s"'$name': '([^']*)'", 1)
+    regexp_extract(line, s"'$name': '([^']*)'", 1)
   private def numField(name: String): Column =
-    regexp_extract(col("log"), s"'$name': (-?\\d+)", 1).cast(LongType)
+    regexp_extract(line, s"'$name': (-?\\d+)", 1).cast(LongType)
 
   /** Last number on the line (the reference's positional
     * `numbers_regex.findall(...)[-k]`, main.py:141-150).
     */
   private def numAt(k: Int): Column =
-    element_at(regexp_extract_all(col("log"), lit(numberRx), lit(0)), k).cast(DoubleType)
+    element_at(regexp_extract_all(line, lit(numberRx), lit(0)), k).cast(DoubleType)
 
   /** The raw-message relation read from disk through the engine's
     * `graftlog` DataSource V2 ([[graft.sources.LogSource]]): one file
@@ -69,24 +88,28 @@ object DelotonPipeline {
   def readLogs(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("graftlog").load(dir)
 
+  /** The message's log line, from its `{"log": ...}` JSON. */
+  private def withLog(raw: DataFrame): DataFrame =
+    raw.withColumn("log", get_json_object(col("value"), "$.log"))
+
+  /** Running count of ride-separator markers so far within the stream. */
+  private val rideSeq: Column =
+    sum(when(col("is_marker"), 1).otherwise(0)).over(Window.partitionBy("stream").orderBy("offset")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
   /** Parse + sessionize the raw messages: adds line timestamp, line-type
     * flags and the running `ride_id` (count of ride-separator markers so
     * far within the stream).
     */
-  def parsed(raw: DataFrame): DataFrame = {
-    val w = Window.partitionBy("stream").orderBy("offset")
-    raw
-      .withColumn("log", get_json_object(col("value"), "$.log"))
-      .withColumn("ts", to_timestamp(substring(col("log"), 1, 23), "yyyy-MM-dd HH:mm:ss.SSS"))
-      .withColumn("is_marker", col("log").contains("--------- beginning of a new ride"))
-      .withColumn("is_start", col("log").contains("Getting user data from server"))
-      .withColumn("is_user", col("log").contains("data = "))
-      .withColumn("is_ride", col("log").contains("Ride - "))
-      .withColumn("is_telemetry", col("log").contains("Telemetry -"))
-      .withColumn("ride_id",
-        sum(when(col("is_marker"), 1).otherwise(0))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
+  def parsed(raw: DataFrame): DataFrame =
+    withLog(raw)
+      .withColumn("ts", lineTs)
+      .withColumn("is_marker", isMarker)
+      .withColumn("is_start", line.contains("Getting user data from server"))
+      .withColumn("is_user", isUser)
+      .withColumn("is_ride", isRide)
+      .withColumn("is_telemetry", isTelemetry)
+      .withColumn("ride_id", rideSeq)
 
   /** `users` table (reference main.py:127-137): parsed from the
     * python-dict-literal user lines, honorific-stripped, postcode from
@@ -94,8 +117,8 @@ object DelotonPipeline {
     * of each user_id wins.
     */
   def users(raw: DataFrame): DataFrame = {
-    val u = parsed(raw).filter(col("is_user"))
-      .select(col("stream"), col("offset"), col("ts"),
+    val u = withLog(raw).filter(isUser)
+      .select(col("stream"), col("offset"), lineTs.as("ts"),
         numField("user_id").as("user_id"),
         regexp_replace(field("name"), honorifics, "").as("name"),
         field("gender").as("gender"),
@@ -123,16 +146,22 @@ object DelotonPipeline {
     * intended semantics — start = session min(ts), duration = last
     * 'Ride -' sample, averages over the real samples of each kind only,
     * first and last ride of the batch trimmed (A4, main.py:175).
+    *
+    * Every number is taken from its line before the sessionizing window,
+    * so the one exchange by `stream` carries a few numbers per line, not
+    * the message text.
     */
   def rides(raw: DataFrame): DataFrame = {
-    val p = parsed(raw)
-    val byRide = p.filter(!col("is_marker"))
-      .withColumn("duration", when(col("is_ride"), numAt(-2)))
-      .withColumn("resistance", when(col("is_ride"), numAt(-1).cast(IntegerType)))
-      .withColumn("hrt", when(col("is_telemetry"), numAt(-3).cast(IntegerType)))
-      .withColumn("rpm", when(col("is_telemetry"), numAt(-2)))
-      .withColumn("power", when(col("is_telemetry"), numAt(-1)))
-      .withColumn("user_id", when(col("is_user"), numField("user_id")))
+    val lines = withLog(raw).select(col("stream"), col("offset"),
+      lineTs.as("ts"),
+      isMarker.as("is_marker"),
+      when(isRide, numAt(-2)).as("duration"),
+      when(isRide, numAt(-1).cast(IntegerType)).as("resistance"),
+      when(isTelemetry, numAt(-3).cast(IntegerType)).as("hrt"),
+      when(isTelemetry, numAt(-2)).as("rpm"),
+      when(isTelemetry, numAt(-1)).as("power"),
+      when(isUser, numField("user_id")).as("user_id"))
+    val byRide = lines.withColumn("ride_id", rideSeq).filter(!col("is_marker"))
     // full-frame window: every row of a ride sees the ride's final
     // duration (a bare groupBy last() would be row-order-nondeterministic)
     val fullRide = Window.partitionBy("stream", "ride_id").orderBy("ts", "offset")
@@ -150,10 +179,13 @@ object DelotonPipeline {
         max(col("user_id")).as("user_id"))
       .filter(col("user_id").isNotNull)
     // boundary trim (main.py:175): first and last ride of each stream are
-    // potentially cut off by the batch window — drop them
-    val bounds = agg.groupBy("stream")
-      .agg(min("ride_id").as("lo"), max("ride_id").as("hi"))
-    agg.join(broadcast(bounds), "stream")
+    // potentially cut off by the batch window — drop them. A window over
+    // the aggregated rides reuses their `stream` partitioning, where a
+    // joined per-stream aggregate would scan and parse the batch again.
+    val perStream = Window.partitionBy("stream")
+    agg
+      .withColumn("lo", min("ride_id").over(perStream))
+      .withColumn("hi", max("ride_id").over(perStream))
       .filter(col("ride_id") > col("lo") && col("ride_id") < col("hi"))
       .select("stream", "ride_id", "start_time", "duration",
         "avg_resistance", "avg_rpm", "avg_power", "avg_hrt", "user_id")

@@ -76,6 +76,11 @@ object Endpoints {
     rides.filter(col("ride_id") =!= rideId)
 
   /** The reference serializes every response via
-    * `to_json(orient="records")` (api.py:66,73,94). */
-  def toJsonRecords(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq
+    * `to_json(orient="records")` (api.py:66,73,94). The records are
+    * built inside the query's own plan — the same JSON writer
+    * `Dataset.toJSON` uses, byte for byte — so a request plans once and
+    * skips `toJSON`'s second plan and RDD round trip.
+    */
+  def toJsonRecords(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(col("*")))).collect().toSeq.map(_.getString(0))
 }

@@ -70,6 +70,84 @@ class DelotonPipelineSpec extends SparkSpecBase {
     assert(ride2.getLong(8) == 816L)
   }
 
+  /** A ride of [[ride]]'s shape, starting at `t` ("yyyy-MM-dd HH:mm"):
+    * durations d.0 then d.5, resistance avg 40, rpm 29, power 7.5, hrt 86.
+    */
+  private def plainRide(t: String, d: Int, uid: Long): Seq[String] = Seq(
+    msg(s"$t:00.000", "[INFO]: --------- beginning of a new ride"),
+    msg(s"$t:01.000", "[INFO]: Getting user data from server"),
+    msg(s"$t:01.500", userLine(uid, "Sam Rider")),
+    msg(s"$t:02.000", s"[INFO]: Ride - duration = $d.0; resistance = 30"),
+    msg(s"$t:02.500", "[INFO]: Telemetry - hrt = 84; rpm = 27; power = 5.25"),
+    msg(s"$t:03.000", s"[INFO]: Ride - duration = $d.5; resistance = 50"),
+    msg(s"$t:03.500", "[INFO]: Telemetry - hrt = 86; rpm = 29; power = 7.75"),
+    msg(s"$t:04.000", "[INFO]: Telemetry - hrt = 88; rpm = 31; power = 9.5"))
+
+  /** Four log files, one per stream:
+    *  - bike-a: two rides, both dropped by the boundary trim;
+    *  - bike-b: a user-less line before the first marker (ride 0), then
+    *    rides 1-4 with users and a user-less ride 5. Rides 0 and 5 are
+    *    dropped before the trim and do not count as its bounds, so the
+    *    trim drops 1 and 4. Ride 2 has no `Ride -` sample; ride 3's
+    *    `Ride -` samples are logged out of timestamp order;
+    *  - bike-c: an empty file;
+    *  - bike-d: three plain rides, the middle one kept.
+    */
+  private lazy val multiStream: Seq[(String, Seq[String])] = Seq(
+    "bike-a" -> (plainRide("2024-02-01 09:00", 1, 911L) ++ plainRide("2024-02-01 09:10", 2, 912L)),
+    "bike-b" -> (Seq(msg("2024-02-01 09:59:59.000", "[INFO]: Telemetry - hrt = 70; rpm = 10; power = 1.0")) ++
+      plainRide("2024-02-01 10:00", 1, 901L) ++
+      Seq(
+        msg("2024-02-01 10:10:00.000", "[INFO]: --------- beginning of a new ride"),
+        msg("2024-02-01 10:10:01.000", "[INFO]: Getting user data from server"),
+        msg("2024-02-01 10:10:01.500", userLine(902L, "Ms Ann Lee")),
+        msg("2024-02-01 10:10:02.000", "[INFO]: Telemetry - hrt = 90; rpm = 40; power = 10.5"),
+        msg("2024-02-01 10:10:03.000", "[INFO]: Telemetry - hrt = 92; rpm = 42; power = 11.5"),
+        msg("2024-02-01 10:20:00.000", "[INFO]: --------- beginning of a new ride"),
+        msg("2024-02-01 10:20:01.000", userLine(903L, "Bo Chen")),
+        // logged later, sampled later: the ride's final duration
+        msg("2024-02-01 10:20:05.000", "[INFO]: Ride - duration = 30.0; resistance = 20"),
+        msg("2024-02-01 10:20:03.000", "[INFO]: Ride - duration = 31.0; resistance = 40"),
+        msg("2024-02-01 10:20:04.000", "[INFO]: Telemetry - hrt = 100; rpm = 50; power = 20.25")) ++
+      plainRide("2024-02-01 10:30", 4, 904L) ++
+      Seq(
+        msg("2024-02-01 10:40:00.000", "[INFO]: --------- beginning of a new ride"),
+        msg("2024-02-01 10:40:02.000", "[INFO]: Ride - duration = 5.0; resistance = 30"),
+        msg("2024-02-01 10:40:03.000", "[INFO]: Telemetry - hrt = 84; rpm = 27; power = 5.25"))),
+    "bike-c" -> Seq.empty,
+    "bike-d" -> (plainRide("2024-02-02 08:00", 1, 921L) ++ plainRide("2024-02-02 08:10", 2, 922L) ++
+      plainRide("2024-02-02 08:20", 3, 923L)))
+
+  private def multiStreamDir(): String = {
+    val dir = tmpDir()
+    multiStream.foreach { case (stream, lines) =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$stream.jsonl"),
+        lines.mkString("\n").getBytes("UTF-8"))
+    }
+    dir
+  }
+
+  test("rides over several graftlog streams: golden rows, trim bounds per stream") {
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val got = DelotonPipeline.rides(DelotonPipeline.readLogs(spark, multiStreamDir()))
+      .orderBy("stream", "ride_id").collect().toSeq
+    assert(got == Seq(
+      Row("bike-b", 2L, ts("2024-02-01 10:10:01"), null, null, 41.0, 11.0, 91.0, 902L),
+      Row("bike-b", 3L, ts("2024-02-01 10:20:01"), 30.0, 30.0, 50.0, 20.25, 100.0, 903L),
+      Row("bike-d", 2L, ts("2024-02-02 08:10:01"), 2.5, 40.0, 29.0, 7.5, 86.0, 922L)))
+  }
+
+  test("rides: graftlog files and the same rows as a DataFrame give one result") {
+    val fromFiles = DelotonPipeline.rides(DelotonPipeline.readLogs(spark, multiStreamDir()))
+    val rows = multiStream.flatMap { case (stream, lines) =>
+      lines.zipWithIndex.map { case (v, i) => Row(stream, i.toLong, v) }
+    }
+    val fromRows = DelotonPipeline.rides(df(DelotonPipeline.rawSchema, rows: _*))
+    def sorted(d: org.apache.spark.sql.DataFrame) = d.orderBy("stream", "ride_id").collect().toSeq
+    assert(fromFiles.schema == fromRows.schema)
+    assert(sorted(fromFiles) == sorted(fromRows))
+  }
+
   test("idempotent upsert skips existing keys (ON CONFLICT DO NOTHING)") {
     val u = DelotonPipeline.users(raw)
     val existing = u.filter(org.apache.spark.sql.functions.col("user_id") === 815L)
@@ -94,6 +172,34 @@ class DelotonPipelineSpec extends SparkSpecBase {
     val back = spark.read.jdbc(url, "users_t", new java.util.Properties)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(back == Map(815L -> "existing", 816L -> "fresh", 817L -> "fresher"))
+  }
+
+  test("toJsonRecords is byte-identical to Dataset.toJSON") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types._
+    val users = DelotonPipeline.users(raw)
+    val rides = DelotonPipeline.rides(raw)
+    val shapes = Seq(
+      "ride_by_id" -> Endpoints.rideById(rides, 3L),
+      "riders" -> Endpoints.allRiders(users),
+      "rider_by_id" -> Endpoints.riderById(users, 816L),
+      "riders_by_gender" -> Endpoints.ridersByGender(users, "male"),
+      "riders_by_age" -> Endpoints.ridersByAge(users, None, Some(0), Some(200)),
+      "rides_by_gender" -> Endpoints.ridesByGender(users, rides, "male"),
+      "rides_for_rider" -> Endpoints.ridesForRider(rides, 815L),
+      "daily" -> Endpoints.dailyRides(rides, None),
+      "null fields" -> rides.withColumn("duration", lit(null).cast(DoubleType))
+        .withColumn("user_id", lit(null).cast(LongType)),
+      "empty" -> Endpoints.rideById(rides, -1L),
+      "dotted name" -> users.select(col("user_id").as("user.id"), col("name")),
+      "sub-second ts" -> df(StructType(Seq(StructField("ts", TimestampType))),
+        Row(java.sql.Timestamp.valueOf("2024-01-02 12:00:01.125")),
+        Row(java.sql.Timestamp.valueOf("2024-01-02 12:00:01.000001"))))
+    shapes.foreach { case (name, d) =>
+      val viaToJson = d.toJSON.collect().toSeq.sorted
+      assert(Endpoints.toJsonRecords(d).sorted == viaToJson, name)
+      if (name != "empty") assert(viaToJson.nonEmpty, s"$name: the shape must serialise some rows")
+    }
   }
 
   test("endpoints: gender join, daily prefix filter, delete anti-join") {

@@ -1,14 +1,21 @@
 package graft
 
+import graft.etl.DelotonPipeline
 import graft.ops.{Relational, Similarity}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.types.StringType
 
 /** Plan-shape regression guards for the 100 TB design properties
   * (SURVEY.md §4 / BASELINE "scale-design bar"): filters and projections
   * must reach the parquet scan, dimension joins must broadcast, and the
   * similarity joins must never degenerate into cartesian products.
   */
-class PlanQualitySpec extends SparkSpecBase {
+class PlanQualitySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -622,5 +629,46 @@ class PlanQualitySpec extends SparkSpecBase {
       assert(saltedExchanges.nonEmpty, "join exchange must include the salt key:\n" + p)
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** Two streams of the deloton log shape as `graftlog` files. */
+  private def logDir(): String = {
+    val dir = tmpDir()
+    def line(ts: String, l: String) = s"""{"log": "2024-01-01 $ts $l"}"""
+    Seq("bike-1", "bike-2").foreach { b =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$b.jsonl"), Seq(
+        line("12:00:00.000", "[INFO]: --------- beginning of a new ride"),
+        line("12:00:01.000", "[INFO]: data = {'user_id': 7, 'name': 'A', 'gender': 'male'}"),
+        line("12:00:02.000", "[INFO]: Ride - duration = 1.0; resistance = 30"),
+        line("12:00:03.000", "[INFO]: Telemetry - hrt = 84; rpm = 27; power = 5.25")
+      ).mkString("\n").getBytes("UTF-8"))
+    }
+    dir
+  }
+
+  private def hashKeys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+    case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    case _ => Nil
+  }
+
+  test("rides: one graftlog scan, one exchange by stream, and only numbers cross it") {
+    val plan = DelotonPipeline.rides(DelotonPipeline.readLogs(spark, logDir()))
+      .queryExecution.executedPlan
+    val scans = collect(plan) { case s: BatchScanExec => s }
+    assert(scans.size == 1 && scans.head.toString.contains("graftlog"), plan)
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.map(hashKeys) == Seq(Seq("stream")), plan)
+    assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
+    val text = shuffles.head.child.output.filter(_.dataType == StringType).map(_.name)
+    assert(text == Seq("stream"), s"string columns crossing the exchange: $text\n$plan")
+  }
+
+  test("users: two graftlog scans, one exchange by user_id, the anchor broadcast") {
+    val plan = DelotonPipeline.users(DelotonPipeline.readLogs(spark, logDir()))
+      .queryExecution.executedPlan
+    assert(collect(plan) { case s: BatchScanExec => s }.size == 2, plan)
+    val hashed = collect(plan) { case e: ShuffleExchangeExec => e }.map(hashKeys).filter(_.nonEmpty)
+    assert(hashed == Seq(Seq("user_id")), plan)
+    assert(collect(plan) { case b: BroadcastExchangeExec => b }.size == 1, plan)
   }
 }
