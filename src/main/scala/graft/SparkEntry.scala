@@ -1977,8 +1977,7 @@ object SparkEntry {
         "FROM t GROUP BY source, lang ORDER BY source, lang"),
     // q145: q22's per-row norm + one percent_rank window per label on
     // the ROUNDED norm ALONE (ties share a rank in both engines, and
-    // the flag stays a pure monotone function of norm4 — the property
-    // the streaming threshold snapshot replays)
+    // the flag stays a pure monotone function of norm4)
     "q145_norm_outliers" ->
       ("WITH px AS (SELECT vec_id, label, CAST(unnest(embedding) AS DOUBLE) AS x FROM embeddings), " +
         "n AS (SELECT vec_id, label, floor(sqrt(sum(x*x))*10000 + 0.5)/10000 AS norm4 " +

@@ -71,11 +71,10 @@ object DelotonPipeline {
   private def numField(name: String): Column =
     regexp_extract(line, s"'$name': (-?\\d+)", 1).cast(LongType)
 
-  /** Last number on the line (the reference's positional
-    * `numbers_regex.findall(...)[-k]`, main.py:141-150).
+  /** The k-th number from the end of the line's `nums` (the reference's
+    * positional `numbers_regex.findall(...)[-k]`, main.py:141-150).
     */
-  private def numAt(k: Int): Column =
-    element_at(regexp_extract_all(line, lit(numberRx), lit(0)), k).cast(DoubleType)
+  private def numAt(k: Int): Column = element_at(col("nums"), k).cast(DoubleType)
 
   /** The raw-message relation read from disk through the engine's
     * `graftlog` DataSource V2 ([[graft.sources.LogSource]]): one file
@@ -152,15 +151,21 @@ object DelotonPipeline {
     * the message text.
     */
   def rides(raw: DataFrame): DataFrame = {
-    val lines = withLog(raw).select(col("stream"), col("offset"),
-      lineTs.as("ts"),
-      isMarker.as("is_marker"),
-      when(isRide, numAt(-2)).as("duration"),
-      when(isRide, numAt(-1).cast(IntegerType)).as("resistance"),
-      when(isTelemetry, numAt(-3).cast(IntegerType)).as("hrt"),
-      when(isTelemetry, numAt(-2)).as("rpm"),
-      when(isTelemetry, numAt(-1)).as("power"),
-      when(isUser, numField("user_id")).as("user_id"))
+    // one regex pass per ride or telemetry line; every number is taken
+    // from its result (Catalyst keeps a non-cheap expression that is
+    // read several times in its own Project)
+    val lines = withLog(raw)
+      .withColumn("nums", when(isRide || isTelemetry,
+        regexp_extract_all(line, lit(numberRx), lit(0))))
+      .select(col("stream"), col("offset"),
+        lineTs.as("ts"),
+        isMarker.as("is_marker"),
+        when(isRide, numAt(-2)).as("duration"),
+        when(isRide, numAt(-1).cast(IntegerType)).as("resistance"),
+        when(isTelemetry, numAt(-3).cast(IntegerType)).as("hrt"),
+        when(isTelemetry, numAt(-2)).as("rpm"),
+        when(isTelemetry, numAt(-1)).as("power"),
+        when(isUser, numField("user_id")).as("user_id"))
     val byRide = lines.withColumn("ride_id", rideSeq).filter(!col("is_marker"))
     // full-frame window: every row of a ride sees the ride's final
     // duration (a bare groupBy last() would be row-order-nondeterministic)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * `row_number() OVER (PARTITION BY g ORDER BY …) <= k` window in the
   * kNN family's read path.
   *
-  * Why an aggregate and not the window (measured, Q115Prof): q115's
+  * Why an aggregate and not the window (measured on q115): its
   * n² sim kernel costs 0.31 s at sf0.1 — the 4 M-row window exchange
   * behind it costs ~3.2 s, 90 % of the operator. A window must SHIP
   * every candidate row to its group's sort; this aggregate is

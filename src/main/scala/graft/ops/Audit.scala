@@ -37,10 +37,8 @@ object Audit {
   private def checksumTerm(key: Column): Column =
     ((key % ChecksumMod) * KnuthMult % ChecksumMod).cast(DecimalType(38, 0))
 
-  /** The same per-key term in the Long domain — the ONE formula shared
-    * with the streaming manifest maintenance
-    * ([[graft.streaming.StreamingOps.merkleStream]]), so batch and
-    * stream cannot drift apart.
+  /** The same per-key term in the Long domain, for computing expected
+    * buckets and checksums outside Spark.
     */
   private[graft] def checksumTermLong(k: Long): Long =
     (k % ChecksumMod) * KnuthMult % ChecksumMod
@@ -297,8 +295,8 @@ object Audit {
     // round 10 with a (table_name, bucket) STRING key (ten-stage
     // 1.93-2.11 s vs 2.20-2.57 s), round 11 with the stronger packed
     // LONG key tbl_id·257+bucket over an int-tagged pre-agg union
-    // (1.64 s vs 2.44 s; graft.tools.Q178Shape, output-identical
-    // proven in-run, SCALING.md §4). The per-table subplans each keep
+    // (1.64 s vs 2.44 s, output-identical proven in-run, SCALING.md
+    // §4). The per-table subplans each keep
     // a narrow scan → 256-group map-side partial agg in their own
     // codegen stage; the union forces one generic pipeline over the
     // widened stream. At real scale the per-table aggregates are
@@ -316,41 +314,6 @@ object Audit {
           (sum(checksumTerm(col("pk"))) % ChecksumMod).cast(LongType).as("checksum"))
         .select(lit(table).as("table_name"), col("bucket"), col("n_rows"), col("checksum"))
     }.reduce(_ unionByName _).orderBy("table_name", "bucket")
-
-  /** The packed-long one-exchange alternative shape for q178 (probe
-    * only — see Q178Shape): tag each pk projection with an int table
-    * id, union BEFORE any aggregate, run ONE exchange keyed on the
-    * packed long tbl_id·256 + bucket (≤ 2,560 groups), and re-attach
-    * names from a 10-row broadcast. Round 10's union-first experiment
-    * grouped on the table-name STRING and lost; this tests whether
-    * the string key (not the union) was the cost.
-    */
-  private[graft] def q178MerkleManifestPacked(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val tagged = TablePk.zipWithIndex.map { case ((table, pkExpr), tid) =>
-      Tables.all(table)(spark, dir)
-        .select(lit(tid).as("tid"), expr(pkExpr).cast(LongType).as("pk"))
-    }.reduce(_ unionByName _)
-    val names = TablePk.zipWithIndex
-      .map { case ((table, _), tid) => (tid, table) }.toDF("tid", "table_name")
-    tagged
-      .withColumn("bucket", (checksumTerm(col("pk")) % 256).cast(LongType))
-      // NULL pk → NULL bucket: pack it to slot 256 so the packed key
-      // stays total, then unpack back to a NULL bucket row
-      .withColumn("slot", coalesce(col("bucket"), lit(256L)))
-      .groupBy((col("tid").cast(LongType) * 257L + col("slot")).as("packed"))
-      .agg(count(lit(1)).as("n_rows"),
-        (sum(checksumTerm(col("pk"))) % ChecksumMod).cast(LongType).as("checksum"))
-      .select((col("packed") % 257L).as("slot"),
-        expr("CAST(packed div 257 AS INT)").as("tid"),
-        col("n_rows"), col("checksum"))
-      .join(broadcast(names), "tid")
-      .select(col("table_name"),
-        when(col("slot") === 256L, lit(null).cast(LongType))
-          .otherwise(col("slot")).as("bucket"),
-        col("n_rows"), col("checksum"))
-      .orderBy("table_name", "bucket")
-  }
 
   /** q214 — MANIFEST DIFF (anti-entropy repair plan): the CONSUMER of
     * [[q178MerkleManifest]]'s artifact — compare two replicas' bucket
@@ -426,52 +389,6 @@ object Audit {
           (col("n_matched_child") < col("n_child_keyed")).as("drops_children"))
     }.reduce(_ unionByName _).orderBy("edge")
 
-  /** q182's verdict computed from a per-(edge, key) count relation
-    * (edge, k, cc, pc) — the sink-side readout of
-    * [[graft.streaming.StreamingOps.keyCountStream]]'s drained
-    * last-wins feed (child ticks = side 0 → cc, parent ticks =
-    * side 1 → pc). Same output schema and flags as
-    * [[q182JoinCardinality]], derived identically: the inner cCnt⋈pCnt
-    * of the batch is `k IS NOT NULL AND pc > 0` here (a key only a
-    * parent carries has cc = 0 and contributes nothing), n_parent
-    * counts every parent row null keys included, and the explode/drop
-    * flags compare the same exact integers. The grouped counts are
-    * LEFT-JOINED onto the declared [[FkEdges]] seed (one literal row
-    * per edge, zeros when the feed carried no tick for it) because the
-    * batch side always emits one row per declared edge even over empty
-    * tables — a bare groupBy("edge") would drop exactly those edges
-    * and break the 'same output, derived identically' contract on the
-    * empty-edge degenerate case (round-12 ADVICE). StreamingSpec
-    * proves the two paths row-identical on a drained warehouse replay;
-    * AuditSpec pins the absent-edge case (empty feed ≡ batch q182 over
-    * an empty warehouse).
-    */
-  private[graft] def cardinalityReadout(perEdgeKey: DataFrame): DataFrame = {
-    import perEdgeKey.sparkSession.implicits._
-    val seed = FkEdges.map { case (child, ck, parent, pk) =>
-      s"$child.$ck -> $parent.$pk" }.toDF("edge")
-    val counts = perEdgeKey.groupBy("edge").agg(
-        coalesce(sum(when(col("k").isNotNull, col("cc"))), lit(0L))
-          .cast(LongType).as("n_child_keyed"),
-        coalesce(sum(when(col("k").isNull, col("cc"))), lit(0L))
-          .cast(LongType).as("n_child_null"),
-        coalesce(sum(col("pc")), lit(0L)).cast(LongType).as("n_parent"),
-        coalesce(sum(when(col("k").isNotNull,
-            col("cc").cast(DecimalType(38, 0)) * col("pc"))), lit(0L))
-          .cast(LongType).as("n_join_rows"),
-        coalesce(sum(when(col("k").isNotNull && col("pc") > 0, col("cc"))), lit(0L))
-          .cast(LongType).as("n_matched_child"))
-    seed.join(counts, Seq("edge"), "left")
-      .select(col("edge") +:
-        Seq("n_child_keyed", "n_child_null", "n_parent", "n_join_rows",
-          "n_matched_child").map(c => coalesce(col(c), lit(0L)).as(c)): _*)
-      .select(col("edge"), col("n_child_keyed"), col("n_child_null"),
-        col("n_parent"), col("n_join_rows"),
-        (col("n_join_rows") > col("n_child_keyed")).as("explodes"),
-        (col("n_matched_child") < col("n_child_keyed")).as("drops_children"))
-      .orderBy("edge")
-  }
-
   /** The join-key columns the skew audit profiles — every key a
     * declared join in this library shuffles on (the FK edges' child
     * sides plus events' two power-law keys).
@@ -513,13 +430,8 @@ object Audit {
     }.reduce(_ unionByName _)
       .groupBy("rel", "k").agg(count(lit(1)).as("cnt")))
 
-  /** q174's readout factored over ANY per-key count relation
-    * (rel, k, cnt) — the [[graft.ops.Events.concurrencySweep]]
-    * discipline: the batch audit feeds it the scan-built counts, and
-    * the streaming dual's drained last-wins feed
-    * ([[graft.streaming.StreamingOps.keyCountStream]]) feeds it the
-    * state-maintained ones, so the skew verdict has exactly one
-    * definition in two runtimes.
+  /** q174's readout over a per-key count relation (rel, k, cnt): the
+    * per-relation stats, the hottest key and the salt verdict.
     */
   private[graft] def skewReadout(perKey: DataFrame): DataFrame = {
     val stats = perKey.groupBy("rel").agg(

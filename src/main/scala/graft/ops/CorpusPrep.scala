@@ -14,16 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object CorpusPrep {
 
-  /** Pipeline constants — the SINGLE definition the batch pipeline
-    * (q67) and the streaming twin (StreamingOps.prepStream) both read,
-    * so tuning one path cannot silently diverge from the other.
+  /** Pipeline constants: one definition for every stage of q67 that
+    * reads them.
     */
   val MinTokens = 10
   val ChunkWindow = 16
   val ChunkStride = 12
 
-  /** Stages 1–2 (PII scrub → tokenize → length gate), shared verbatim
-    * by q67 and the streaming path. Keeps every input column besides
+  /** Stages 1–2 (PII scrub → tokenize → length gate) of q67's
+    * pipeline. Keeps every input column besides
     * `text`; adds `clean_text` and `toks`.
     */
   private[graft] def scrubAndGate(docs: DataFrame): DataFrame =

@@ -291,12 +291,8 @@ object Events {
       unix_micros(col("session_start")).as("sus"),
       unix_micros(col("session_end")).as("eus")))
 
-  /** The q200 sweep readout factored over ANY span relation
-    * (`sus`/`eus` µs columns) so the batch query and the streaming
-    * dual's drained-feed readout share one definition — the
-    * sweep-and-session-report-can-never-disagree stance, extended to
-    * the closed-span feed [[graft.streaming.StreamingOps.concurrencyStream]]
-    * emits.
+  /** The q200 sweep readout over a span relation (`sus`/`eus` µs
+    * columns).
     */
   private[graft] def concurrencySweep(sp: DataFrame): DataFrame = {
     val bounds = sp.select(
@@ -358,8 +354,7 @@ object Events {
 
   /** Tumbling-window rollup (SURVEY.md §2.8's `window(ts, "24 hours")`
     * mapping, batch form): epoch-aligned 6-hour buckets with per-bucket
-    * count and exact mean — the streaming dual is the same expression
-    * under `readStream` + watermark.
+    * count and exact mean.
     */
   def q41TumblingWindow(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)

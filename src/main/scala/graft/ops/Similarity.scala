@@ -39,8 +39,8 @@ object Similarity {
     * bounded-heap AGGREGATE instead of a row_number window. A window
     * ships every candidate row to its group's sort — the candidate
     * universe; the heap folds map-side to ≤ k rows per (query,
-    * partition), so the exchange carries the answer (Q115Prof: the
-    * window was ~half of q115's non-kernel cost; output proven
+    * partition), so the exchange carries the answer (measured on
+    * q115: the window was ~half of its non-kernel cost; output proven
     * hash-identical — k smallest (−sim, tid) ≡ (sim DESC, tid ASC),
     * exact for the 4-dp finite sims all callers produce).
     *
@@ -57,8 +57,8 @@ object Similarity {
     * must not raise it session-wide. The scale property that matters —
     * the exchange carries ≤ k rows per (query, partition), never the
     * candidate stream — holds in both modes (the sort is map-side,
-    * pre-combine, per-partition); Q115Prof measured the raised-
-    * threshold hash mode worth only ~0.3 s of q115's 2.5 s at sf0.1.
+    * pre-combine, per-partition); the raised-threshold hash mode was
+    * measured worth only ~0.3 s of q115's 2.5 s at sf0.1.
     * A deployment whose aggregates are all k-bounded can raise the
     * knob per session and reclaim it.
     */
@@ -86,20 +86,13 @@ object Similarity {
     * vocabulary) — far below the sketch error the near-dup operators
     * already carry.
     */
-  private[graft] def docTokenSets(spark: SparkSession, dir: String): DataFrame =
-    docTokenSetsOf(Tables.documents(spark, dir))
-
-  /** [[docTokenSets]] over an arbitrary (doc_id, text) relation — the
-    * form a streaming micro-batch feeds ([[graft.streaming.StreamingOps]]'
-    * cascade ingest).
-    */
-  private[graft] def docTokenSetsOf(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private[graft] def docTokenSets(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
     // shingle_hashes(·, 1) ≡ sort_array(array_distinct(transform(·,
     // xxhash64))) — same token ids, but one JIT'd kernel instead of an
     // interpreted HOF chain re-evaluated at every optimizer inlining
     // site (the same CodegenFallback trap q55's build hit)
-    docs.select(col("doc_id"),
+    Tables.documents(spark, dir).select(col("doc_id"),
         call_function("shingle_hashes", split(col("text"), " "), lit(1)).as("toks"))
       .withColumn("sz", size(col("toks")))
   }
@@ -261,8 +254,7 @@ object Similarity {
     * bridges two base clusters; the declared q244 carries the contract
     * to the driver's oracle as the verbatim q21 SQL). Cost: one linear
     * rank/remap pass over the merged corpus plus a candidate join
-    * whose a-side is delta-sized — the base corpus is never re-paired
-    * (tools.DeltaProbe measures the scaling point).
+    * whose a-side is delta-sized — the base corpus is never re-paired.
     *
     * Precondition: the append-only ingest contract (delta doc_ids are
     * new — q81/q210/q242/q243's shared precondition).
@@ -299,33 +291,6 @@ object Similarity {
         greatest(col("na"), col("nb")).as("gb"), col("jaccard"),
         when(col("na") < col("nb"), col("ma0")).otherwise(col("mb0")).as("ma"),
         when(col("na") < col("nb"), col("mb0")).otherwise(col("ma0")).as("mb"))
-  }
-
-  /** The whole-cascade delta merge — what a production ingest actually
-    * runs: ONE tagged collapse merge and ONE asymmetric delta join,
-    * shared by all three staged outputs (the per-family [[pairsMerge]]/
-    * [[labelsMerge]] entries each recompute them when called
-    * separately, the right shape for the self-contained declared keys
-    * but not for a pipeline run). Returns (merged groups, merged
-    * pairs, merged doc labels) — the three relations a staging
-    * registry re-materializes per ingest batch. The delta join's
-    * verified new pairs are checkpointed once and feed both the pair
-    * union and the label continuation. `stage` is the shared-relation
-    * materializer — [[staged]] (eager localCheckpoint) by default; the
-    * streaming ingest loop ([[graft.streaming.StreamingOps]]'
-    * CascadeIngestState) passes an epoch-scoped parquet writer instead
-    * so per-batch intermediates never accrete in the block manager.
-    */
-  def cascadeMerge(baseGroups: DataFrame, basePairs: DataFrame,
-      baseLabels: DataFrame, deltaDocToks: DataFrame,
-      p: Int, q: Int, docBytes: BigInt,
-      stage: DataFrame => DataFrame = staged): (DataFrame, DataFrame, DataFrame) = {
-    val tagged = stage(collapseMergeTagged(baseGroups, deltaDocToks))
-    val fresh = stage(newPairsFromTagged(tagged, p, q, docBytes))
-    val groups = tagged.select(col("gid"), col("toks"), col("sz"), col("members"))
-    val pairs = pairsRemapFromTagged(tagged, basePairs, docBytes).unionByName(fresh)
-    val labels = labelsMergeFromTagged(tagged, baseLabels, fresh)
-    (groups, pairs, labels)
   }
 
   /** Batch DELTA-MERGE for the component-label family (VERDICT r13
@@ -460,9 +425,7 @@ object Similarity {
     * (surviving base pairs re-keyed over the staged tagged merge;
     * verified new pairs from the staged asymmetric delta join) unioned
     * and staged: the post-ingest `set_pairs_45` state a production
-    * merge re-materializes ([[cascadeMerge]]'s documented contract —
-    * "the three relations a staging registry re-materializes per
-    * ingest batch").
+    * merge re-materializes per ingest batch.
     */
   private[graft] def stagedMergePairs(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "merge_pairs") {
@@ -858,8 +821,7 @@ object Similarity {
     * per-family partition policy (VERDICT r13 Next #4). Round-13's
     * re-record measured the two staged build classes wanting OPPOSITE
     * partition counts at 30×: the candidate+verify joins drop their
-    * straggler under 128-way hashing (SetPairsPart; §2.3's clean
-    * curve), while the O(diameter) fixpoints (coreness) pay +50% at
+    * straggler under 128-way hashing (§2.3's clean curve), while the O(diameter) fixpoints (coreness) pay +50% at
     * 128 from per-round scheduling on small relations. So the pair
     * joins size their shuffles from the CORPUS (one partition per
     * ~160 KB of compressed documents — the join's intermediate
@@ -867,8 +829,8 @@ object Similarity {
     * right-sized for the exploded prefix/candidate stream), and once
     * the corpus outgrows the session setting the fine regime FLOORS
     * AT 128: the regression class is one hot token's candidate bucket
-    * landing whole in one hash partition, and DeltaProbe measured a
-    * merely proportional count insufficient — the 10× corpus at 39
+    * landing whole in one hash partition, and a merely proportional
+    * count was measured insufficient — the 10× corpus at 39
     * partitions still pays the straggler (37.3 s) while 125/128 split
     * it at both 10× and 30× (20.6 s at 30×). Capped at 4096 (a real
     * cluster raises `spark.graft.pairJoinPartitions` explicitly);
@@ -944,29 +906,14 @@ object Similarity {
     session.read.schema(e.schema).parquet(e.path)
   }
 
-  /** Deterministic EMITTED-candidate count of the unigram J ≥ 4/5
-    * prefix join. Kept for the record and the CandCount tool, but NOT
-    * the canary's pin: per SCALING.md §6.1's table the band-canonical
-    * ordering emits 10.57M vs the hash-order revert's 17.24M at 3× —
-    * only a 1.6× separation, inside a noise-safe gate's headroom —
-    * while at 30× it is 107.1M vs 1,307.7M, far past where a 3× gate
-    * looks. (An earlier "the emitted count is ordering-invariant"
-    * reading came from the df-value-cap run, whose 'canonical' side
-    * had silently degenerated to hash order — see [[dfRankedSets]].)
-    * The statistic that separates the orderings AT 3× is per-key
-    * bucket skew — see [[cascadeBucketStats]], the canary's pins.
-    */
-  private[graft] def cascadeCandidateCount(spark: SparkSession, dir: String): Long =
-    prefixJoinCandidates(stagedUnigramGroups(spark, dir), 4, 5).count()
-
   /** Deterministic BUCKET statistics of the unigram J ≥ 4/5 prefix
     * join — over prefix tokens t with bucket size n(t) (sets whose
     * prefix contains t): the TOTAL evaluated pairings Σ C(n, 2) and
     * the HOTTEST single bucket max C(n, 2). The total is what the
     * candidate equi-join pays in aggregate; the max is what a single
     * task pays, and per-KEY load cannot be split by adding partitions
-    * (SetPairsPart: 128 vs 32 partitions moved the pre-fix 30× join
-    * only 297 → 271 s). Round-13 measurement (SCALING.md §6.1's
+    * (128 vs 32 partitions moved the pre-fix 30× join only
+    * 297 → 271 s). Round-13 measurement (SCALING.md §6.1's
     * table) put the ordering's 3× separation on the TOTAL at only
     * 1.39× (canonical 72.98M vs hash 101.27M Σ C(n, 2)) — inside the
     * 2× noise-safe gate headroom, so the total alone cannot catch a
@@ -1196,9 +1143,8 @@ object Similarity {
     * frequent tokens land in prefixes at their natural rate and their
     * candidate buckets grow as the SQUARE of corpus scale — the
     * superlinear term the round-12 cascade sweep measured (set_pairs_45
-    * slope 1.75 on the 3×→10× step, isolated from shuffle density by
-    * tools.SetPairsPart: 128 vs 32 partitions moved 297 s to only
-    * 271 s at 30×, so the growth was candidate volume, not partition
+    * slope 1.75 on the 3×→10× step, isolated from shuffle density:
+    * 128 vs 32 partitions moved 297 s to only 271 s at 30×, so the growth was candidate volume, not partition
     * fatness). Rank-ordered arrays put each set's RAREST tokens in its
     * prefix (the PPJoin/AllPairs design, Xiao et al. 2008, public
     * algorithm), so a bucket's size is bounded by the token's df and
@@ -2446,7 +2392,7 @@ object Similarity {
         "q120_knn_label_ivf (IVF-bucketed cid equi-join)"),
         col("qid") =!= col("tid"))
       // the k-neighbor cut is the BOUNDED-HEAP AGGREGATE, not a
-      // row_number window (round 11, measured in Q115Prof): a window
+      // row_number window (round 11, measured on q115): a window
       // must ship every candidate row to its group's sort — 4 M rows
       // at sf0.1, the candidate UNIVERSE at scale — where top_k_struct
       // folds map-side to ≤ k rows per (group, partition), so the
@@ -3208,8 +3154,8 @@ object Similarity {
     *
     * Uses the exact prefix-filtered cascade (zero false negatives), so
     * the result is oracle-checkable — the LSH variant (q25's banding
-    * against persisted index signatures) is the documented sublinear
-    * swap-in at the recall trade. Partner counting stays at GROUP
+    * against a persisted signature index) is the sublinear swap-in at
+    * the recall trade. Partner counting stays at GROUP
     * level: per group, the index-doc count; per qualifying pair, the
     * partner group's count — a batch doc's partners = own group's
     * index docs (exact dups, J = 1) + paired groups' (near dups).
@@ -3663,10 +3609,7 @@ object Similarity {
     * ships (vec_id, label, norm), never the vectors. Rank order is on
     * the ROUNDED norm ALONE (no vec_id tie-break — ties share a rank,
     * which both engines compute identically), so the flag is a pure
-    * monotone function of norm4 and freezes to a per-label threshold
-    * snapshot the streaming ingest gate replays exactly
-    * ([[graft.streaming.StreamingOps.normGateStream]], q128's
-    * calibration discipline).
+    * monotone function of norm4.
     */
   def q145NormOutliers(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
@@ -3678,25 +3621,6 @@ object Similarity {
       .select("vec_id", "label", "norm4", "pr", "is_outlier")
       .orderBy("vec_id")
   }
-
-  /** q145's outlier cut FROZEN as a per-label norm threshold snapshot
-    * — the streaming-ingest face of the percent_rank flag (the
-    * sourceKeepThresholds discipline: rank statistics are corpus-
-    * global, so the stream consumes a batch-fit snapshot instead of
-    * re-ranking). Per label, the minimum norm4 among flagged rows;
-    * `norm4 >= threshold` reproduces `pr >= 0.98` EXACTLY because
-    * percent_rank is monotone in norm4 and ties share a rank. A label
-    * with no flagged row (tiny labels rank below the cut everywhere)
-    * maps to Double.MaxValue so the stream flags nothing either.
-    * Model-sized collect: one row per distinct label.
-    */
-  private[graft] def labelNormThresholds(spark: SparkSession, dir: String): Map[Int, Double] =
-    q145NormOutliers(spark, dir)
-      .groupBy("label")
-      .agg(min(when(col("is_outlier"), col("norm4"))).as("thr"))
-      .collect()
-      .map(r => r.getInt(0) ->
-        (if (r.isNullAt(1)) Double.MaxValue else r.getDouble(1))).toMap
 
   /** E5 — multimodal/array column math: per-row vector norm, mean and
     * dimensionality via higher-order functions. Purely row-local — no

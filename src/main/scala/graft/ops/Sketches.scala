@@ -54,11 +54,10 @@ object Sketches {
   /** Attach the per-row banded minhash signature as SCALAR columns
     * h0..h{Bands-1}, keeping `keep`'s columns: one codegen'd loop per
     * set (graft.functions.MinHashSignature) — the nested-HOF
-    * formulation evaluates 32·|toks| interpreted lambdas. Shared by the
-    * self-join candidate generation (q25) and the persisted index /
-    * streaming-probe pair ([[indexSignatures]] /
-    * [[graft.streaming.StreamingOps.nearDupAdmitStream]]) so both sides
-    * of an index probe band identically by construction.
+    * formulation evaluates 32·|toks| interpreted lambdas. Shared by
+    * q25's self-join candidate generation, the staged `minhash_bands`
+    * family and the sketch-label merge, so every side of a banding join
+    * bands identically by construction.
     */
   private[graft] def withBandHashes(df: DataFrame, toksCol: String, keep: Seq[String]): DataFrame = {
     val rowsPerBand = NumPerm / Bands
@@ -71,7 +70,7 @@ object Sketches {
 
   /** True iff the a/b row pair already collided in a band BEFORE
     * a.band_id — the first-collision exactly-once emission predicate,
-    * shared by the q25/q26 self-joins and the streaming index probe.
+    * shared by the q25/q26 self-joins.
     */
   private[graft] def earlierBandCollision(nBands: Int): org.apache.spark.sql.Column =
     (1 until nBands).map { i =>
@@ -106,33 +105,6 @@ object Sketches {
   private def stagedMinhashBands(spark: SparkSession, dir: String): DataFrame =
     Similarity.stagedTable(spark, dir, "minhash_bands")(
       withBandHashes(Similarity.stagedUnigramGroups(spark, dir), "toks", Seq("gid")))
-
-  /** The persisted LSH INDEX artifact for streaming near-dup admission:
-    * one row per (band_id, band_hash) posting of each distinct token
-    * set of the indexed corpus (sources src0–src9, q81/q100's
-    * convention), carrying the set itself (for exact verification), its
-    * size, its index-doc count, and the full banded signature (for the
-    * first-collision probe dedup). A production pipeline writes THIS
-    * relation to a staging table partitioned/bucketed by (band_id,
-    * band_hash) and every admission job — batch or streaming — probes
-    * it; it is all longs and long arrays, so a parquet round trip is
-    * exact.
-    */
-  def indexSignatures(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    val indexSources = (0 to 9).map(i => s"src$i")
-    val idx = graft.Tables.documents(spark, dir)
-      .filter(col("source").isin(indexSources: _*))
-      .select(col("doc_id"),
-        call_function("shingle_hashes", split(col("text"), " "), lit(1)).as("toks"))
-    val groups = Similarity.tokenSetGroupsBy(idx)
-      .withColumn("idx_docs", size(col("members")).cast(LongType))
-    withBandHashes(groups, "toks", Seq("gid", "toks", "sz", "idx_docs"))
-      .select(col("gid") +: col("toks") +: col("sz") +: col("idx_docs") +:
-        (0 until Bands).map(j => col(s"h$j")) :+
-        posexplode(array((0 until Bands).map(j => col(s"h$j")): _*))
-          .as(Seq("band_id", "band_hash")): _*)
-  }
 
   /** q25 — MinHash+LSH near-dup: per-doc signature = min of xxhash64
     * seeded per permutation over the token set; docs sharing any banded

@@ -679,9 +679,7 @@ object TextOps {
     * are key-disjoint from the base and the merge is a bare union: no
     * re-aggregation, no base-side shuffle at all — the cheapest
     * possible incremental shape, which is exactly why the postings
-    * family was picked for it (the streaming twin, postingStream,
-    * maintains the same feed at ingest time; this is its batch
-    * catch-up). DeltaMergeSpec pins merge ≡ recompute row identity.
+    * family was picked for it. DeltaMergeSpec pins merge ≡ recompute row identity.
     */
   def tfPostingsMerge(basePostings: DataFrame, deltaDocs: DataFrame): DataFrame =
     basePostings.unionByName(tfPostingsOf(deltaDocs))

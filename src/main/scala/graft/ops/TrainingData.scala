@@ -501,9 +501,8 @@ object TrainingData {
       .orderBy("source")
   }
 
-  /** The bigram/bucket expressions and the bucket-model build, shared
-    * by q114 and [[graft.streaming.StreamingOps.dsirScoreStream]] so
-    * the batch trainer and the streaming scorer cannot diverge.
+  /** The bigram/bucket expressions and the bucket-model build behind
+    * q114's importance weights.
     */
   private[graft] def dsirBigrams(text: Column): Column = {
     val w = split(text, " ")
@@ -842,8 +841,8 @@ object TrainingData {
   /** The trained merge table as a cross-query staged relation — the
     * IVF-model lifecycle (train once per (session, corpus), persist,
     * consume everywhere): q133 reads it back as the declared readout,
-    * and every BPE-priced operator (q105/q106/q109/q112/q118/q122 and
-    * the streaming dual) replays the SAME staged table.
+    * and every BPE-priced operator (q105/q106/q109/q112/q118/q122)
+    * replays the SAME staged table.
     */
   private[graft] def stagedBpeMerges(spark: SparkSession, dir: String): DataFrame =
     Similarity.stagedTable(spark, dir, "bpe_merges")(
@@ -1143,9 +1142,8 @@ object TrainingData {
 
   /** The q119 classifier as a reusable row-local stage over any
     * relation with a `text` column — adds per-language `<l>_hits`
-    * columns and the argmax `lang_pred`. ONE definition shared by the
-    * batch q119 and [[graft.streaming.StreamingOps.qualityGateStream]]
-    * so batch and ingest cannot diverge.
+    * columns and the argmax `lang_pred`. ONE definition shared by
+    * q119 and every key that gates on the predicted language.
     */
   private[graft] def withLangTrigramPred(docs: DataFrame): DataFrame = {
     val t = lower(col("text"))
@@ -1365,9 +1363,7 @@ object TrainingData {
     * cost two shuffles for a quantity that is a pure function of the
     * row): sort the token array, fold run-lengths of equal tokens
     * through one `aggregate` HOF accumulating Σ c·ln c, and finish with
-    * ln n − Σ/n. Zero shuffle — the gate scales like a scan and runs
-    * under Structured Streaming with no state (the
-    * [[graft.streaming.StreamingOps.qualityGateStream]] stage). The
+    * ln n − Σ/n. Zero shuffle — the gate scales like a scan. The
     * run-start test is `run == 0`, not a sentinel `prev` value, so an
     * empty-string token (split artifacts) still counts as a run.
     */
@@ -1420,25 +1416,6 @@ object TrainingData {
       .select("doc_id", "source", "score", "cal_pct", "keep")
       .orderBy("doc_id")
   }
-
-  /** q128's calibration FROZEN as a per-source threshold snapshot —
-    * the streaming-ingest face of the percent_rank cut (the
-    * dsirScoreStream model discipline: rank statistics are corpus-
-    * global, so the stream consumes a batch-fit snapshot instead of
-    * re-ranking). Per source, the minimum score among kept rows;
-    * `score >= threshold` reproduces `cal_pct >= 0.2` EXACTLY because
-    * percent_rank is monotone in score and ties share a rank. A source
-    * whose every row is cut (single-row sources rank 0.0) maps to
-    * Double.MaxValue so the stream cuts it too. Model-sized collect:
-    * one row per distinct source (domains, not documents).
-    */
-  private[graft] def sourceKeepThresholds(spark: SparkSession, dir: String): Map[String, Double] =
-    q128SourceCalibration(spark, dir)
-      .groupBy("source")
-      .agg(min(when(col("keep") === 1L, col("score"))).as("thr"))
-      .collect()
-      .map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) Double.MaxValue else r.getDouble(1))).toMap
 
   /** q143 — CURRICULUM INTERLEAVE: a deterministic global training
     * order that walks sources round-robin in descending quality — doc

@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   *    SCALING.md; ceilings are set ~1.8× the measured min so machine
   *    noise cannot flap the gate but a 3×-at-3× regression trips it);
   *  - PLAN-SHAPE assertions read from EVERY timed rep's executedPlan
-  *    (the Q25Part lesson: only the AQE final plan reports the join
-  *    regime that actually executed — which is why each rep executes
+  *    (only the AQE final plan reports the join regime that actually
+  *    executed — which is why each rep executes
   *    the df's OWN QueryExecution via toRdd: a separate df.count()
   *    would leave the inspected plan un-finalized, isFinalPlan=false;
   *    round-12 ADVICE: a strategy flip between reps must not hide
@@ -221,7 +221,7 @@ object Canary {
         // UNTIMED: execute the df's OWN QueryExecution so its AQE
         // finalizes (df.count() plans a separate aggregate and leaves
         // this plan at isFinalPlan=false — the pins would read the
-        // static skeleton, which is exactly the Q25Part failure mode;
+        // static skeleton, not the join regime that actually ran;
         // a column-pruned count also stays the TIMED action, keeping
         // every ceiling on its historical measurement basis — toRdd
         // materializes all output columns and re-based q25 2.3× up)

@@ -348,6 +348,11 @@ class EventOpsSpec extends SparkSpecBase {
       (d0 + 1, 1L, 0L, 1L),  // u4 opens, nothing closes
       (d0 + 2, 1L, 2L, 2L),  // u4 carried in + u5
       (d0 + 5, 1L, 1L, 1L)), out.toSeq)
+    // the sweep over q13's published sessions reproduces q200 exactly
+    val sweep = Events.concurrencySweep(Events.q13Sessionize(spark, dir)
+        .selectExpr("unix_micros(session_start) AS sus", "unix_micros(session_end) AS eus"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(sweep.toSeq == out.toSeq, sweep.toSeq)
   }
 
   test("q204 weekday profile: integer dow, hot/quiet share verdicts, pre-epoch day floors correctly") {
@@ -434,12 +439,15 @@ class EventOpsSpec extends SparkSpecBase {
       Row(5L, T0, 1L, "a", 0.0, "[1, 2]"),   // array: not an object
       Row(6L, T0, 1L, "a", 0.0, null),       // null payload
       Row(7L, T0, 1L, "a", 0.0, """{"k": 69}"""), // duplicate value of k
-      Row(8L, T0, 1L, "a", 0.0, "{'k': 1}")) // single quotes: invalid to BOTH engines
+      Row(8L, T0, 1L, "a", 0.0, "{'k': 1}"), // single quotes: invalid to BOTH engines
+      Row(9L, T0, 1L, "a", 0.0, """{"r": NaN}"""), // NaN literal: invalid to BOTH engines
+      Row(10L, T0, 1L, "a", 0.0, """{"m": null}""")) // JSON null: a row, no value
     write(dir, "events", df(Tables.eventsRawSchema, rows: _*))
     val out = Events.q211JsonProfile(spark, dir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getBoolean(4)))
-    // n_total counts ALL 8 rows; k appears on 3 with 2 distinct values
-    assert(out.toSeq == Seq(("k", 3L, 2L, 8L, false), ("m", 1L, 1L, 8L, false)), out.toSeq)
+    // n_total counts ALL 10 rows; k appears on 3 with 2 distinct values;
+    // m's JSON-null row counts toward n_rows but never toward the values
+    assert(out.toSeq == Seq(("k", 3L, 2L, 10L, false), ("m", 2L, 1L, 10L, false)), out.toSeq)
   }
 
   test("q187 growth: new users count on their FIRST day only; cumulative total runs over gaps") {
@@ -544,6 +552,19 @@ class EventOpsSpec extends SparkSpecBase {
     assert(out(("c", d0 + 11)) == ((10L, 0L, 0L, false, false)))
     assert(out.keys.forall(k => k._2 > d0 + 6)) // baseline days excluded
     assert(out.size == 6 + 10 + 5)
+    // type e has only 3 active days (no complete baseline) → no rows;
+    // type f's day-7 NULL-user, NULL-value event counts (groups on
+    // type + day alone)
+    val dir2 = tmpDir()
+    id = 0L
+    val rows2 = ((0L to 2L).flatMap(d => burst("e", d, 1)) ++
+      (0L to 7L).flatMap(d => burst("f", d, 2)))
+      .map(r => Row(r._1, r._2, r._3, r._4, r._5, r._6)) :+
+      Row(999L, T0 + 7 * Day + Hour, null, "f", null, "{}")
+    write(dir2, "events", df(Tables.eventsRawSchema, rows2: _*))
+    val out2 = Events.q196LevelShift(spark, dir2).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(out2.toSeq == Seq(("f", d0 + 7, 3L)), out2.toSeq)
   }
 
   test("q197 bot cadence: regular and fast actors flag, jitter survives, humans and short runs don't") {
@@ -650,7 +671,9 @@ class EventOpsSpec extends SparkSpecBase {
       // type c: exactly ON the 24h boundary (anchor-24h) → counted (>=); lag 24h → stale
       (4L, T0 + Hour, 3L, "c", 0.0, "{}"),
       // type d: exactly 1h of lag → NOT stale (strict >)
-      (5L, T0 + 24 * Hour, 4L, "d", 0.0, "{}"))
+      (5L, T0 + 24 * Hour, 4L, "d", 0.0, "{}"),
+      // NULL type: its own audited row (22h lag, in the window, stale)
+      (6L, T0 + 3 * Hour, 5L, null, 0.0, "{}"))
     val out = Events.q171FreshnessAudit(spark, dir).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(3), r.getLong(4), r.getBoolean(5)))).toMap
@@ -658,6 +681,7 @@ class EventOpsSpec extends SparkSpecBase {
     assert(out("b") == ((1L, 25L * 3600, 0L, true)), out("b"))
     assert(out("c") == ((1L, 24L * 3600, 1L, true)), out("c"))
     assert(out("d") == ((1L, 3600L, 1L, false)), out("d"))
+    assert(out(null) == ((1L, 22L * 3600, 1L, true)), out.get(null))
   }
 
   test("q172 completeness: hour buckets over each type's own span, missing hours counted") {
@@ -734,6 +758,17 @@ class EventOpsSpec extends SparkSpecBase {
     assert(out(("a", "b")) == ((3L, 5000000L, 1.0e7, 8.2e7, 100000000L)), out)
     assert(out(("b", "a")) == ((1L, 20000000L, 2.0e7, 2.0e7, 20000000L)), out)
     assert(out.size == 2)
+    // a ts tie orders by (ts, event_id): x (id 0) precedes b (id 2) at
+    // +10s, so the zero-dwell hop is x→b, never b→x
+    val tie = tmpDir()
+    writeEvents(tie,
+      (1L, T0, 1L, "a", 0.0, "{}"),
+      (2L, T0 + 10 * S, 1L, "b", 0.0, "{}"),
+      (0L, T0 + 10 * S, 1L, "x", 0.0, "{}"),
+      (3L, T0 + 30 * S, 1L, "a", 0.0, "{}"))
+    val hops = Events.q215TransitionDwell(spark, tie).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(3))).toSet
+    assert(hops == Set(("a", "x", 10000000L), ("x", "b", 0L), ("b", "a", 20000000L)), hops)
   }
 
   test("q217 session entry/exit: bounces are single-event sessions; same-instant ties break on event_id") {

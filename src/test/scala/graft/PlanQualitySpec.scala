@@ -3,7 +3,7 @@ package graft
 import graft.etl.DelotonPipeline
 import graft.ops.{Relational, Similarity}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, RegExpExtractAll}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -661,6 +661,10 @@ class PlanQualitySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
     val text = shuffles.head.child.output.filter(_.dataType == StringType).map(_.name)
     assert(text == Seq("stream"), s"string columns crossing the exchange: $text\n$plan")
+    // each line's numbers come from one regex pass, not one per number taken
+    val regexes = collect(plan) { case p =>
+      p.expressions.flatMap(_.collect { case r: RegExpExtractAll => r }) }.flatten
+    assert(regexes.size == 1, plan)
   }
 
   test("users: two graftlog scans, one exchange by user_id, the anchor broadcast") {

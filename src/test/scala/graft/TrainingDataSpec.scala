@@ -358,6 +358,21 @@ class TrainingDataSpec extends SparkSpecBase {
       .map(_._1).toSet
     val got = TrainingData.q81IncrementalDedup(spark, sf).collect().map(_.getLong(0)).toSet
     assert(got == expected)
+    // q100, the near-dup face of the same index/batch split: one row per
+    // rejected batch doc with its count of index partners
+    val dir = tmpDir()
+    val idx1 = (0 until 10).map(i => s"a$i").mkString(" ")
+    val idx2 = (0 until 10).map(i => s"p$i").mkString(" ")
+    writeDocuments(dir,
+      (1L, idx1, "en", "src0", 1L), (2L, idx1, "en", "src1", 1L),
+      (3L, idx2, "en", "src0", 1L),
+      (10L, idx1, "en", "new0", 1L), // exact dup of the 2-doc index group
+      (11L, idx2 + " extra", "en", "new0", 1L), // J = 10/11 vs doc 3
+      (12L, (0 until 10).map(i => s"z$i").mkString(" "), "en", "new0", 1L), // admitted
+      (13L, idx1, "en", "new0", 1L)) // a second exact dup: rejected too
+    val q100 = Similarity.q100IncrementalNeardup(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(q100 == Map(10L -> 2L, 11L -> 1L, 13L -> 2L), q100)
   }
 
   test("q113 source cap: kept set IS the independent top-15 per source by (score, doc_id)") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import org.scalacheck.{Gen, Prop, Test}
 
 /** Behavior specs for the round-7 curation operators: the
   * cluster-quality keeper (q136), the mix/epoch schedule (q137), the
@@ -29,6 +30,27 @@ class CurationOpsSpec extends SparkSpecBase {
     // the singleton keeps itself and removes nothing
     assert(out(9L)._1 == 9L && out(9L)._3 == 0L, out)
     assert(out.size == 2)
+    // q136's ordKey 40000 − round(score·10⁴) is exact only while every
+    // non-null q28 score lies in [0, 4]; adversarial texts must not leave it
+    import spark.implicits._
+    val token = Gen.oneOf(Gen.oneOf(TextOps.Stopwords), Gen.alphaStr,
+      Gen.oneOf("!", "...", "?!", "—", ""),
+      Gen.listOf(Gen.oneOf("é", "ß", "ж", "中", "ع", "😀", "\u200b")).map(_.mkString))
+    val text = Gen.oneOf(
+      Gen.const(""), Gen.const("   "),
+      Gen.listOf(Gen.oneOf("!", ".", ",", "?", "-", " ")).map(_.mkString), // punctuation only
+      Gen.zip(token, Gen.choose(1, 600)).map { case (t, n) => Seq.fill(n)(t).mkString(" ") },
+      Gen.choose(0, 3000).flatMap(Gen.listOfN(_, Gen.oneOf("中", "ж", "😀", "é", "ع"))
+        .map(_.mkString)), // one long unicode run
+      Gen.listOf(token).map(_.mkString(" "))) // mixed scripts
+    val inRange = Prop.forAll(Gen.listOfN(40, text)) { texts =>
+      val scores = TrainingData.qualityScored(texts.zipWithIndex
+          .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text"))
+        .select("score").collect().filterNot(_.isNullAt(0)).map(_.getDouble(0))
+      scores.length == texts.length && scores.forall(s => s >= 0.0 && s <= 4.0)
+    }
+    val res = Test.check(Test.Parameters.default.withMinSuccessfulTests(25), inRange)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("q137: undersized sources cap at MaxEpochs and flag; sized sources realize the full target") {

@@ -178,23 +178,6 @@ class DeltaMergeSpec extends SparkSpecBase {
       List((2L, 2L), (10L, 2L), (11L, 2L)))
   }
 
-  test("cascadeMerge (shared tagged merge + delta join) ≡ the per-family merges") {
-    GraftFunctions.register(spark)
-    val base = Similarity.tokenSetGroupsBy(toksDf(bridgeBase))
-    val basePairs = Similarity.setPairsAbove(base, 4, 5, BigInt(1))
-    val (bl, _) = Similarity.hashMinLabels(base.select(col("gid")),
-      basePairs.select(col("ga"), col("gb")))
-    val baseLabels = Similarity.expandClusterLabels(base, bl)
-    val (groups, pairs, labels) = Similarity.cascadeMerge(
-      base, basePairs, baseLabels, toksDf(bridgeDelta), 4, 5, BigInt(1))
-    assert(rows(groups) == rows(Similarity.collapseMerge(base, toksDf(bridgeDelta))
-      .select("gid", "toks", "sz", "members")))
-    assert(rows(pairs) ==
-      rows(Similarity.pairsMerge(base, basePairs, toksDf(bridgeDelta), 4, 5, BigInt(1))))
-    assert(rows(labels) ==
-      rows(Similarity.labelsMerge(base, baseLabels, toksDf(bridgeDelta), 4, 5, BigInt(1))))
-  }
-
   test("pairsMerge/labelsMerge with an empty delta are the base relations") {
     GraftFunctions.register(spark)
     val base = Similarity.tokenSetGroupsBy(toksDf(bridgeBase))

@@ -87,12 +87,9 @@ class EmbeddingCurationSpec extends SparkSpecBase {
     assert(lone.getAs[Double]("pr") == 0.0 && !lone.getAs[Boolean]("is_outlier"),
       "single-row label must rank 0.0 and pass")
     // ALL tied norm-1 rows share rank 1 → pr 0.0 (the tie rule that
-    // makes the flag a pure function of norm4, replayable by threshold)
+    // makes the flag a pure function of norm4)
     val tied = out.filter(r => r.getAs[Long]("vec_id") < 20L)
     assert(tied.length == 20 && tied.forall(_.getAs[Double]("pr") == 0.0))
-    // the threshold snapshot replays the flag exactly
-    val thr = Similarity.labelNormThresholds(spark, dir)
-    assert(thr(0) == 100.0 && thr(1) == Double.MaxValue, thr)
   }
 
   test("q149: mid-range values carry the exact 1/(2·255) reconstruction error; extremes and constant dims are exact") {

@@ -31,7 +31,6 @@ class EmptyCorpusSpec extends SparkSpecBase {
     assert(TextOps.q104RepeatedSpans(spark, dir).count() == 0)
     assert(TextOps.q107SpanDedup(spark, dir).count() == 0)
     assert(Sketches.q25MinhashNeardup(spark, dir).count() == 0)
-    assert(Sketches.indexSignatures(spark, dir).count() == 0)
     assert(Similarity.q218DedupTokenBudget(spark, dir).count() == 0)
   }
 
