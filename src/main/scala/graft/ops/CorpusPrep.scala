@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,7 +44,7 @@ object CorpusPrep {
     * corpus every downstream variant starts from.
     */
   private[graft] def stagedPrepDeduped(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "prep_deduped") {
+    stagedTable(spark, dir, "prep_deduped") {
       val cleaned = scrubAndGate(
         Tables.documents(spark, dir).select("doc_id", "lang", "source", "text"))
       val wDup = Window.partitionBy(sha2(col("clean_text"), 256)).orderBy("doc_id")
@@ -59,7 +60,7 @@ object CorpusPrep {
     * scrubbed/gated/deduped corpus).
     */
   private[graft] def stagedPrepGroups(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "prep_groups") {
+    stagedTable(spark, dir, "prep_groups") {
       graft.functions.GraftFunctions.register(spark)
       Similarity.tokenSetGroupsBy(
         stagedPrepDeduped(spark, dir).select(col("doc_id"),
@@ -74,7 +75,7 @@ object CorpusPrep {
     * right after the collapse, exactly like the main cascade does.
     */
   private[graft] def stagedPrepPairs45(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "prep_pairs_45") {
+    stagedTable(spark, dir, "prep_pairs_45") {
       graft.functions.GraftFunctions.register(spark)
       // pair-join partition policy (see stagedSetPairs45): the scrubbed
       // prep collapse feeds the same candidate+verify join shape

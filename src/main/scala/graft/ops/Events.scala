@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,7 +73,7 @@ object Events {
     * single-partition rank window is q187's sanctioned regime.
     */
   private[ops] def stagedEventTypeDict(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "event_type_dict") {
+    stagedTable(spark, dir, "event_type_dict") {
       Tables.events(spark, dir).select("event_type").distinct()
         .withColumn("tid",
           row_number().over(Window.orderBy(col("event_type"))).cast(LongType))
@@ -191,7 +192,7 @@ object Events {
     * round trip is exact (value/props ride no session consumer).
     */
   private def sessionizedEvents(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "sessionized_events") {
+    stagedTable(spark, dir, "sessionized_events") {
       val e = Tables.events(spark, dir)
       val prevUs = lag(unix_micros(col("ts")), 1).over(userWindow)
       val newSession = when(

@@ -1,6 +1,9 @@
 package graft.ops
 
 import graft.Tables
+import graft.stage.PartitionPolicy.{fixpointSession, pairJoinSession}
+import graft.stage.Staging
+import graft.stage.Staging.{stagedEntries, stagedReadIn, stagedTable}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,56 +230,22 @@ object Similarity {
         greatest(col("a.gid"), col("b.gid")).as("gb"))
   }
 
-  /** Batch DELTA-MERGE for the qualifying-set-pairs family (VERDICT
-    * r13 Next #1 — incrementality for the cascade stage where it
-    * changes the economics: the pair join is the staged build's top
-    * recurring cost). Fold an ingest batch into an existing staged
-    * (ga, gb, jaccard, ma, mb) relation WITHOUT re-running the
-    * base×base candidate join:
-    *
-    *  1. re-key the delta through the collapse
-    *     ([[collapseMergeTagged]] — q243's machinery);
-    *  2. SURVIVING base pairs are re-keyed, not recomputed: toks are
-    *     immutable under the append-only contract, so a base pair's
-    *     jaccard is already final — only gids relabel (gid = min
-    *     member can drop when a delta doc with a smaller doc_id joins
-    *     a group) and member lists refresh, one metadata join each
-    *     side, ga/gb re-normalized least/greatest;
-    *  3. NEW pairs can only involve a new token set, so ONE asymmetric
-    *     prefix join of delta-side prefixes against (base ∪ delta)
-    *     ranked prefixes ([[prefixJoinCandidatesDelta]]) generates the
-    *     candidates — never base×base again — and the standard verify
-    *     ([[verifySetJaccardWithMembersGeneral]]) scores them against
-    *     the merged collapse.
-    *
-    * merge ≡ recompute exactly (DeltaMergeSpec pins row identity
-    * against the cold [[setPairsAbove]], including a delta that
-    * bridges two base clusters; the declared q244 carries the contract
-    * to the driver's oracle as the verbatim q21 SQL). Cost: one linear
-    * rank/remap pass over the merged corpus plus a candidate join
-    * whose a-side is delta-sized — the base corpus is never re-paired.
+  /** The set-pairs DELTA-MERGE's first half (VERDICT r13 Next #1),
+    * over a tagged collapse merge ([[collapseMergeTagged]]): SURVIVING
+    * base pairs are re-keyed, not recomputed. Token sets are immutable
+    * under the append-only contract, so a base pair's jaccard is
+    * already final — only gids relabel (gid = min member drops when a
+    * delta doc with a smaller doc_id joins a group) and member lists
+    * refresh, one metadata join per side, ga/gb re-normalized
+    * least/greatest. Unioned with [[newPairsFromTagged]] it equals the
+    * cold [[setPairsAbove]] over the merged corpus: DeltaMergeSpec pins
+    * row identity (a delta bridging two base clusters included), and
+    * q244/q246 carry it to the DuckDB oracle as q21/q55's SQL.
     *
     * Precondition: the append-only ingest contract (delta doc_ids are
     * new — q81/q210/q242/q243's shared precondition).
     */
-  def pairsMerge(baseGroups: DataFrame, basePairs: DataFrame,
-      deltaDocToks: DataFrame, p: Int, q: Int, docBytes: BigInt): DataFrame = {
-    val tagged = staged(collapseMergeTagged(baseGroups, deltaDocToks))
-    val (remapped, fresh) = pairsMergeFromTagged(tagged, basePairs, p, q, docBytes)
-    remapped.unionByName(fresh)
-  }
-
-  /** [[pairsMerge]]'s two halves over an already-built tagged merge —
-    * (re-keyed surviving base pairs, verified new pairs) — exposed
-    * separately because [[labelsMerge]] needs ONLY the new pairs (base
-    * connectivity is already encoded in the base labels).
-    */
-  private[graft] def pairsMergeFromTagged(tagged: DataFrame, basePairs: DataFrame,
-      p: Int, q: Int, docBytes: BigInt): (DataFrame, DataFrame) =
-    (pairsRemapFromTagged(tagged, basePairs, docBytes),
-      newPairsFromTagged(tagged, p, q, docBytes))
-
-  private def pairsRemapFromTagged(tagged: DataFrame, basePairs: DataFrame,
+  private[graft] def pairsRemapFromTagged(tagged: DataFrame, basePairs: DataFrame,
       docBytes: BigInt): DataFrame = {
     def side(df: DataFrame): DataFrame =
       if (underBroadcastGate(docBytes)) broadcast(df) else df
@@ -293,33 +262,14 @@ object Similarity {
         when(col("na") < col("nb"), col("mb0")).otherwise(col("ma0")).as("mb"))
   }
 
-  /** Batch DELTA-MERGE for the component-label family (VERDICT r13
-    * Next #1's second half): continue connected components from an
-    * existing doc-level (doc_id, cluster_id) labeling instead of
-    * re-running CC over the full merged edge set. Base components are
-    * CONTRACTED to super-nodes (each surviving group maps to its old
-    * component label through `gid_old`; new groups are their own
-    * super-node), the NEW pairs from the asymmetric delta join project
-    * onto super-node edges (base-base edges collapse inside their
-    * super — they never appear), and [[hashMinLabels]] runs on that
-    * contracted graph, whose size scales with the DELTA (touched
-    * components + new groups' edges), not the corpus. The final label
-    * re-derives as min gid over each super-component — which also
-    * absorbs the gid-relabel case (a delta doc with a smaller doc_id
-    * lowers its component's min even with zero new edges). merge ≡
-    * recompute against the cold [[componentLabels]] build
-    * (DeltaMergeSpec, incl. a bridging delta; declared q245 carries
-    * the contract to the driver's oracle as the verbatim q62 SQL).
-    */
-  def labelsMerge(baseGroups: DataFrame, baseLabels: DataFrame,
-      deltaDocToks: DataFrame, p: Int, q: Int, docBytes: BigInt): DataFrame = {
-    val tagged = staged(collapseMergeTagged(baseGroups, deltaDocToks))
-    labelsMergeFromTagged(tagged, baseLabels,
-      newPairsFromTagged(tagged, p, q, docBytes))
-  }
-
-  /** The verified NEW pairs of a tagged merge — [[pairsMergeFromTagged]]'s
-    * second half alone, for consumers that never touch base pairs.
+  /** The set-pairs DELTA-MERGE's second half: NEW pairs can only
+    * involve a new token set, so ONE asymmetric prefix join of
+    * delta-side prefixes against (base ∪ delta) ranked prefixes
+    * ([[prefixJoinCandidatesDelta]]) generates the candidates — never
+    * base×base again — and the standard verify
+    * ([[verifySetJaccardWithMembersGeneral]]) scores them against the
+    * merged collapse. Cost: one linear rank/remap pass over the merged
+    * corpus plus a candidate join whose a-side is delta-sized.
     */
   private[graft] def newPairsFromTagged(tagged: DataFrame,
       p: Int, q: Int, docBytes: BigInt): DataFrame = {
@@ -332,6 +282,24 @@ object Similarity {
       p.toDouble / q, docBytes)
   }
 
+  /** Batch DELTA-MERGE for the component-label family (VERDICT r13
+    * Next #1's second half): continue connected components from an
+    * existing doc-level (doc_id, cluster_id) labeling instead of
+    * re-running CC over the full merged edge set. Base components are
+    * CONTRACTED to super-nodes (each surviving group maps to its old
+    * component label through `gid_old`; new groups are their own
+    * super-node), the NEW pairs ([[newPairsFromTagged]]) project onto
+    * super-node edges (base-base edges collapse inside their super —
+    * they never appear), and [[hashMinLabels]] runs on that contracted
+    * graph, whose size scales with the DELTA (touched components + new
+    * groups' edges), not the corpus. The final label re-derives as min
+    * gid over each super-component — which also absorbs the
+    * gid-relabel case (a delta doc with a smaller doc_id lowers its
+    * component's min even with zero new edges). merge ≡ recompute
+    * against the cold [[componentLabels]] build (DeltaMergeSpec, incl.
+    * a bridging delta; q245 carries the contract to the DuckDB oracle
+    * as the verbatim q62 SQL).
+    */
   private[graft] def labelsMergeFromTagged(tagged: DataFrame,
       baseLabels: DataFrame, newPairs: DataFrame): DataFrame = {
     // group → super-node: surviving groups inherit their old component
@@ -407,23 +375,21 @@ object Similarity {
 
   /** The asymmetric delta join's verified new pairs, staged — the
     * expensive half of every merge, shared by q244 and q245 and built
-    * under the pair-join partition policy ([[pairJoinShufflePartitions]],
-    * same session-clone discipline as [[stagedSetPairs45]]).
+    * under the pair-join partition policy
+    * ([[graft.stage.PartitionPolicy]], same session-clone discipline as
+    * [[stagedSetPairs45]]).
     */
   private[graft] def stagedMergeFreshPairs(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "merge_fresh_pairs") {
-      stagedMergeTagged(spark, dir) // force the build (idempotent)
-      val path = stagedEntries(spark, dir).find(_.key == "merge_tagged")
-        .getOrElse(throw new IllegalStateException(
-          "staged 'merge_tagged' missing after forcing its build")).path
       val bytes = documentsSizeBytes(spark, dir)
-      val s2 = pairJoinSession(spark, bytes)
-      newPairsFromTagged(s2.read.parquet(path), 4, 5, bytes)
+      newPairsFromTagged(stagedReadIn(pairJoinSession(spark, bytes), spark, dir,
+        "merge_tagged")(stagedMergeTagged(spark, dir)), 4, 5, bytes)
     }
 
-  /** The MERGED pair relation — [[pairsMergeFromTagged]]'s two halves
-    * (surviving base pairs re-keyed over the staged tagged merge;
-    * verified new pairs from the staged asymmetric delta join) unioned
+  /** The MERGED pair relation — the merge's two halves (surviving base
+    * pairs re-keyed over the staged tagged merge,
+    * [[pairsRemapFromTagged]]; verified new pairs from the staged
+    * asymmetric delta join, [[newPairsFromTagged]]) unioned
     * and staged: the post-ingest `set_pairs_45` state a production
     * merge re-materializes per ingest batch.
     */
@@ -450,9 +416,10 @@ object Similarity {
     * query (q243's pattern on the cascade's EXPENSIVE family): BASE =
     * even doc_id collapsed and paired cold (the staged demo families,
     * exactly the state a production ingest starts from), DELTA = odd
-    * doc_id folded in via [[pairsMergeFromTagged]], the merged pairs
-    * staged ([[stagedMergePairs]] — the post-ingest state the next
-    * day's consumers scan) and expanded to doc pairs — q21's exact
+    * doc_id folded in via [[pairsRemapFromTagged]] and
+    * [[newPairsFromTagged]], the merged pairs staged
+    * ([[stagedMergePairs]] — the post-ingest state the next day's
+    * consumers scan) and expanded to doc pairs — q21's exact
     * readout shape over the merged state, exactly as q21 reads
     * `set_pairs_45`, and the oracle IS q21's SQL verbatim: merge ≡
     * recompute, hash-checked by the driver.
@@ -509,13 +476,9 @@ object Similarity {
 
   private[graft] def stagedShingleMergeFreshPairs(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "merge_shingle_fresh_pairs") {
-      stagedShingleMergeTagged(spark, dir) // force the build (idempotent)
-      val path = stagedEntries(spark, dir).find(_.key == "merge_shingle_tagged")
-        .getOrElse(throw new IllegalStateException(
-          "staged 'merge_shingle_tagged' missing after forcing its build")).path
       val bytes = documentsSizeBytes(spark, dir)
-      val s2 = pairJoinSession(spark, bytes)
-      newPairsFromTagged(s2.read.parquet(path), 3, 5, bytes)
+      newPairsFromTagged(stagedReadIn(pairJoinSession(spark, bytes), spark, dir,
+        "merge_shingle_tagged")(stagedShingleMergeTagged(spark, dir)), 3, 5, bytes)
     }
 
   private[graft] def stagedShingleMergePairs(spark: SparkSession, dir: String): DataFrame =
@@ -541,182 +504,41 @@ object Similarity {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Eagerly materialize a cascade-shared relation ONCE and feed every
-    * downstream consumer from the materialized copy — the in-query form
-    * of the staged-cascade pattern (write [[collapsedCorpus]] to a
-    * staging table, run all near-dup operators against it). Without
-    * this, each differently-pruned consumer of the exact-dup collapse
-    * recomputes it (3× per query after exchange reuse — at 100 TB that
-    * is three full corpus scans doing identical work). `localCheckpoint`
-    * is q62's own lineage-truncation device; a cluster deployment swaps
-    * it for `checkpoint()` to reliable storage or the staging-parquet
-    * form (MaterializedCascadeSpec proves that round trip is
-    * output-identical). Eager is safe here: every caller consumes the
-    * relation unconditionally.
-    */
-  private[ops] def staged(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** CROSS-QUERY staging registry: the dedup cascade's shared relations
-    * — the exact-dup collapse ([[stagedUnigramGroups]]), its qualifying
-    * set pairs ([[stagedSetPairs45]]) and the connected-component labels
-    * ([[componentLabels]]) — are each built ONCE per (session, corpus
-    * dir) and written to a parquet staging table; every consumer query
-    * scans the staged copy. This is the registry form of what a 100 TB
-    * pipeline run does between stages: ONE collapse / ONE pair join /
-    * ONE component computation feeding near-dup pairs (q21), survivor
-    * selection (q56), cluster labels (q62/q62b), the dedup report
-    * (q72), incremental admission (q100) and cluster statistics (q108)
-    * — previously each of those queries re-ran the cascade from the raw
-    * corpus (the round-5 verdict measured the three CC queries alone at
-    * ~20% of the whole bench re-doing identical work).
-    *
-    * Parquet, not `localCheckpoint`: staged relations must survive the
-    * aggressive inter-query RDD unpersist the bench harness performs
-    * (Bench.scala's cleanup), and checkpointed lineage cannot be
-    * recomputed once truncated. All staged schemas are longs, long
-    * arrays, strings and 4-dp-rounded doubles, so the round trip is
-    * exact (MaterializedCascadeSpec / StagedRegistrySpec prove
-    * output-identity against the inline computation).
-    *
-    * Deployment shape (the round-6 verdict's "local-run-shaped" fix):
-    *
-    *  - **Per-key latches, no global build lock.** The registry maps
-    *    (session, corpus, key) → a promise; the first caller installs
-    *    it and builds, concurrent callers of the SAME key await that
-    *    one build, and DIFFERENT keys build fully in parallel
-    *    (StagedRegistrySpec's concurrency case). A failed build removes
-    *    its promise so the key is retryable, not poisoned. Builds run
-    *    outside any registry lock, so a staged build may freely consume
-    *    earlier staged relations (component_labels reads set_pairs_45).
-    *  - **Configurable root**: `spark.graft.stagingDir` points staging
-    *    tables at a real warehouse path (per-session subdirectory);
-    *    unset, a per-JVM temp root is used and deleted by a shutdown
-    *    hook. [[evictStagedSession]] drops a session's entries and
-    *    their files eagerly (call on session teardown); entries of
-    *    GC'd sessions are swept opportunistically on later builds.
-    *  - **Session identity is a UUID** held in a WeakHashMap keyed by
-    *    the live session object — unlike an identityHashCode string it
-    *    cannot collide with a future session after GC.
-    *  - **Observability**: each entry records the staged row count
-    *    (read back from the written parquet), surfaced by
-    *    [[stagedEntries]] and the declared manifest query — the
-    *    artifact inventory a production run logs.
-    */
-  private[graft] final case class StagedEntry(
-      session: String, dir: String, key: String, path: String, rows: Long,
-      schema: org.apache.spark.sql.types.StructType)
-
-  private val stagingRegistry = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), scala.concurrent.Promise[StagedEntry]]
-
-  private val sessionIds = new java.util.WeakHashMap[SparkSession, String]
-
-  private def sessionId(spark: SparkSession): String = sessionIds.synchronized {
-    Option(sessionIds.get(spark)).getOrElse {
-      val id = java.util.UUID.randomUUID().toString
-      sessionIds.put(spark, id)
-      id
-    }
-  }
-
-  /** JVM-default staging root, deleted on exit; `spark.graft.stagingDir`
-    * overrides per session (that dir is the caller's artifact store —
-    * eviction deletes per-session subtrees inside it, never the root).
-    */
-  private lazy val defaultStagingRoot: java.io.File = {
-    val root = java.nio.file.Files.createTempDirectory("graft_staging_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
-    root
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  private def stagingRoot(spark: SparkSession): java.io.File =
-    spark.conf.getOption("spark.graft.stagingDir")
-      .map(new java.io.File(_)).getOrElse(defaultStagingRoot)
-
-  /** Reads supply the schema the registry captured from the post-write
-    * read-back, so a staged consumer never pays parquet footer
-    * inference at DataFrame construction — measured at ~30-50 ms per
-    * `spark.read.parquet` on this host, multiplied by every staged
-    * read of every consumer query per bench rep (q135 alone constructs
-    * all 18 families; see OPTIMIZATION_r14.md, guide §6's
-    * listing/metadata cost). The captured schema is the exact parquet
-    * round-trip schema, nullability included.
-    */
-  private[graft] def stagedTable(spark: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    val e = stagedEntry(spark, dir, key)(build)
-    spark.read.schema(e.schema).parquet(e.path)
-  }
-
-  private[graft] def stagedEntry(spark: SparkSession, dir: String, key: String)
-      (build: => DataFrame): StagedEntry = {
-    val sid = sessionId(spark)
-    val mapKey = (sid, dir, key)
-    val fresh = scala.concurrent.Promise[StagedEntry]()
-    val existing = stagingRegistry.putIfAbsent(mapKey, fresh)
-    if (existing != null) {
-      scala.concurrent.Await.result(existing.future, scala.concurrent.duration.Duration.Inf)
-    } else {
-      try {
-        sweepStaleSessions()
-        // corpus-dir hash in the table name keeps two corpora of one
-        // session from colliding inside the per-session subtree; the
-        // `graft_stage_<key>` prefix is part of the public contract
-        // (plan-pinning specs grep scans for it)
-        val table = new java.io.File(new java.io.File(stagingRoot(spark), sid),
-          f"graft_stage_${key}_${dir.hashCode & 0x7fffffff}%08x")
-        build.write.mode("overwrite").parquet(table.toString)
-        val back = spark.read.parquet(table.toString)
-        val entry = StagedEntry(sid, dir, key, table.toString,
-          back.count(), back.schema)
-        fresh.success(entry)
-        entry
-      } catch {
-        case t: Throwable =>
-          stagingRegistry.remove(mapKey, fresh)
-          fresh.failure(t)
-          throw t
-      }
-    }
-  }
-
-  /** Completed staged entries of (session, corpus), key-ordered — the
-    * session's staging-table inventory (the manifest query's source).
-    */
-  private[graft] def stagedEntries(spark: SparkSession, dir: String): Seq[StagedEntry] = {
-    val sid = sessionId(spark)
-    import scala.jdk.CollectionConverters._
-    stagingRegistry.asScala.toSeq
-      .collect { case ((`sid`, `dir`, _), p) if p.isCompleted =>
-        p.future.value.get.toOption }
-      .flatten.sortBy(_.key)
-  }
-
   /** The fixed staged-relation inventory q135 reports — every family
-    * the engine's composed pipelines materialize for this corpus.
-    * A FIXED list (not "whatever is currently staged") so the manifest
-    * is deterministic under any query execution order.
+    * the engine's composed pipelines materialize for this corpus, with
+    * the function that builds it. A FIXED list (not "whatever is
+    * currently staged") so the manifest is deterministic under any
+    * query execution order.
     */
-  private val ManifestFamilies = Seq(
-    "bpe_merges", "clean_pack", "component_labels", "coreness", "doc_lengths",
-    "dsir_weights", "ivf_model", "pos_postings", "prep_deduped", "prep_groups",
-    "prep_pairs_45", "pagerank_scores", "set_pairs_45", "shingle_groups",
-    "shingle_ranked", "sketch_labels", "tf_postings", "unigram_groups")
+  private val ManifestFamilies: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "bpe_merges" -> (TrainingData.stagedBpeMerges(_, _)),
+    "clean_pack" -> (TrainingData.stagedCleanPack(_, _)),
+    "component_labels" -> (componentLabels(_, _)),
+    "coreness" -> (stagedCoreness(_, _)),
+    "doc_lengths" -> (TextOps.stagedDocLengths(_, _)),
+    "dsir_weights" -> (TrainingData.stagedDsirWeights(_, _)),
+    "ivf_model" -> (stagedIvfModel(_, _)),
+    "pos_postings" -> (TextOps.stagedPositionalPostings(_, _)),
+    "prep_deduped" -> (CorpusPrep.stagedPrepDeduped(_, _)),
+    "prep_groups" -> (CorpusPrep.stagedPrepGroups(_, _)),
+    "prep_pairs_45" -> (CorpusPrep.stagedPrepPairs45(_, _)),
+    "pagerank_scores" -> (stagedPagerankScores(_, _)),
+    "set_pairs_45" -> (stagedSetPairs45(_, _)),
+    "shingle_groups" -> (stagedShingleGroups(_, _)),
+    "shingle_ranked" -> (stagedShingleRanked(_, _)),
+    "sketch_labels" -> (Sketches.stagedSketchLabels(_, _)),
+    "tf_postings" -> (TextOps.stagedTfPostings(_, _)),
+    "unigram_groups" -> (stagedUnigramGroups(_, _)))
 
   /** q135 — the staging-registry MANIFEST: one row per staged relation
     * family with its exact staged row count — the artifact inventory a
     * production pipeline run logs after its materialization phase
     * (which tables exist for this corpus, and how big each is). The
-    * query FORCES the full fixed inventory (each build idempotent —
-    * at most once per (session, corpus)) and then reads the counts the
-    * registry recorded from the written parquet, so the output doubles
-    * as an end-to-end audit: every count is independently recomputable
-    * by the oracle from the raw corpus.
+    * query FORCES every [[ManifestFamilies]] build (each idempotent —
+    * at most once per (session, corpus)) and then reads the row counts
+    * the registry recorded from each build's write, so the output
+    * doubles as an end-to-end audit: every count is independently
+    * recomputable by the oracle from the raw corpus.
     *
     * Scale shape: all the heavy lifting is the staging builds
     * themselves, each shared with its query-family consumers; the
@@ -725,57 +547,18 @@ object Similarity {
     */
   def q135StagingManifest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    stagedUnigramGroups(spark, dir)
-    stagedSetPairs45(spark, dir)
-    stagedShingleGroups(spark, dir)
-    stagedShingleRanked(spark, dir)
-    componentLabels(spark, dir)
-    stagedIvfModel(spark, dir)
-    graft.ops.TrainingData.stagedBpeMerges(spark, dir)
-    graft.ops.CorpusPrep.stagedPrepDeduped(spark, dir)
-    graft.ops.CorpusPrep.stagedPrepGroups(spark, dir)
-    graft.ops.CorpusPrep.stagedPrepPairs45(spark, dir)
-    graft.ops.TrainingData.stagedCleanPack(spark, dir)
-    graft.ops.TrainingData.stagedDsirWeights(spark, dir)
-    graft.ops.Sketches.stagedSketchLabels(spark, dir)
-    stagedPagerankScores(spark, dir)
-    stagedCoreness(spark, dir)
-    graft.ops.TextOps.stagedTfPostings(spark, dir)
-    graft.ops.TextOps.stagedDocLengths(spark, dir)
-    graft.ops.TextOps.stagedPositionalPostings(spark, dir)
-    val wanted = ManifestFamilies.toSet
+    ManifestFamilies.foreach { case (_, build) => build(spark, dir) }
+    val wanted = ManifestFamilies.map(_._1).toSet
     stagedEntries(spark, dir)
       .collect { case e if wanted(e.key) => (e.key, e.rows) }
       .toDF("relation", "n_rows")
       .orderBy("relation")
   }
 
-  /** Eagerly drop a session's staged entries and delete their files —
-    * call on session teardown. Idempotent.
+  /** [[Staging.evictStagedSession]] under the name the benchmark
+    * harness (perfbench/harness) calls.
     */
-  def evictStagedSession(spark: SparkSession): Unit = {
-    val sid = sessionIds.synchronized(Option(sessionIds.get(spark))).getOrElse(return)
-    evictSessionId(sid)
-  }
-
-  private def evictSessionId(sid: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    stagingRegistry.asScala.keys.filter(_._1 == sid).foreach { k =>
-      Option(stagingRegistry.remove(k)).foreach { p =>
-        p.future.value.foreach(_.foreach(e => deleteRecursively(new java.io.File(e.path))))
-      }
-    }
-  }
-
-  /** Drop entries whose owning session has been GC'd (its WeakHashMap
-    * id mapping is gone) — the long-lived-JVM leak guard, run
-    * opportunistically before each new staging build.
-    */
-  private def sweepStaleSessions(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val live = sessionIds.synchronized(sessionIds.values.asScala.toSet)
-    stagingRegistry.asScala.keys.map(_._1).toSet.diff(live).foreach(evictSessionId)
-  }
+  def evictStagedSession(spark: SparkSession): Unit = Staging.evictStagedSession(spark)
 
   /** The staged unigram exact-dup collapse — [[collapsedCorpus]] built
     * once per (session, dir) and read back from its staging table.
@@ -791,7 +574,7 @@ object Similarity {
     * q100 (partner counts): the candidate+verify join — the expensive
     * quadratic stage of the cascade — runs once per corpus, exactly as
     * a production run stages it. Built under the PAIR-JOIN partition
-    * policy ([[pairJoinShufflePartitions]]): pair joins want fine
+    * policy ([[graft.stage.PartitionPolicy]]): pair joins want fine
     * hashing, fixpoints want coarse (VERDICT r13 Next #4).
     */
   private[graft] def stagedSetPairs45(spark: SparkSession, dir: String): DataFrame =
@@ -801,109 +584,16 @@ object Similarity {
     }
 
   /** [[setPairsAbove]] over an already-STAGED collapse, built under the
-    * pair-join partition policy: forces the groups build (idempotent),
-    * re-reads its parquet in the policy session, and runs the
-    * candidate+verify join there. Shared by `set_pairs_45` and
-    * `prep_pairs_45`.
+    * pair-join partition policy: the groups are read from their staged
+    * copy in the policy session ([[Staging.stagedReadIn]]) and the
+    * candidate+verify join runs there. Shared by `set_pairs_45`,
+    * `prep_pairs_45` and the merge demo's base pairs.
     */
   private[graft] def setPairsOverStagedGroups(spark: SparkSession, dir: String,
       groupsKey: String, force: => DataFrame, p: Int, q: Int): DataFrame = {
-    force // the staged groups build, run (or found) in the registry
-    val path = stagedEntries(spark, dir).find(_.key == groupsKey)
-      .getOrElse(throw new IllegalStateException(
-        s"staged '$groupsKey' missing after forcing its build")).path
     val bytes = documentsSizeBytes(spark, dir)
-    val s2 = pairJoinSession(spark, bytes)
-    setPairsAbove(s2.read.parquet(path), p, q, bytes)
-  }
-
-  /** Shuffle-partition count for the staged PAIR-JOIN builds — the
-    * per-family partition policy (VERDICT r13 Next #4). Round-13's
-    * re-record measured the two staged build classes wanting OPPOSITE
-    * partition counts at 30×: the candidate+verify joins drop their
-    * straggler under 128-way hashing (§2.3's clean curve), while the O(diameter) fixpoints (coreness) pay +50% at
-    * 128 from per-round scheduling on small relations. So the pair
-    * joins size their shuffles from the CORPUS (one partition per
-    * ~160 KB of compressed documents — the join's intermediate
-    * explodes ~100× over the input, so partitions this "small" are
-    * right-sized for the exploded prefix/candidate stream), and once
-    * the corpus outgrows the session setting the fine regime FLOORS
-    * AT 128: the regression class is one hot token's candidate bucket
-    * landing whole in one hash partition, and a merely proportional
-    * count was measured insufficient — the 10× corpus at 39
-    * partitions still pays the straggler (37.3 s) while 125/128 split
-    * it at both 10× and 30× (20.6 s at 30×). Capped at 4096 (a real
-    * cluster raises `spark.graft.pairJoinPartitions` explicitly);
-    * every other staged family keeps the session conf.
-    */
-  private[graft] def pairJoinShufflePartitions(spark: SparkSession,
-      docBytes: BigInt): Int =
-    spark.conf.getOption("spark.graft.pairJoinPartitions").map(_.toInt).getOrElse {
-      val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val byBytes = (docBytes / BigInt(160L << 10)).min(BigInt(4096)).toInt
-      if (byBytes <= session) session else math.max(128, byBytes)
-    }
-
-  /** A cloned session (shared SparkContext, own SQLConf) carrying the
-    * pair-join partition count — staged builds are isolated plan trees
-    * written eagerly to parquet, so giving the build its own session
-    * scopes the conf exactly to that plan; staged inputs are re-read
-    * from their parquet paths in the clone. No clone when the policy
-    * resolves to the session's own setting.
-    */
-  private[graft] def pairJoinSession(spark: SparkSession, docBytes: BigInt): SparkSession = {
-    val parts = pairJoinShufflePartitions(spark, docBytes)
-    sessionWithPartitions(spark, parts)
-  }
-
-  /** Shuffle-partition count for the staged FIXPOINT builds (coreness,
-    * pagerank_scores, component_labels) — the COARSE half of the
-    * per-family partition policy whose fine half is
-    * [[pairJoinShufflePartitions]] (VERDICT r14 Next #6). An
-    * O(diameter)/fixed-iteration loop pays per-round scheduling and
-    * shuffle-file overhead proportional to the partition count on
-    * per-round relations that are SMALL (contracted remnants,
-    * vertex-sized labels), and the 30× grid measured coreness +33%
-    * slower at 128 partitions than at 32 (300.7 s vs 226.2 s,
-    * SCALING.md §2.3/§2.4) — while the below-cores coarse variant is
-    * REFUTED (round-14's q62b A/B: 1-partition rounds 37% slower; job
-    * fixed cost dominates under the core count). Policy: cap the loop
-    * at the context's core count when the session conf is finer; never
-    * move when the session conf is already at/below cores. Local
-    * sessions run shuffle.partitions == cores, so the policy resolves
-    * to the session conf and NO clone is made — the driver's bench
-    * numbers stay comparable by construction.
-    * `spark.graft.fixpointPartitions` overrides on a real cluster.
-    */
-  private[graft] def fixpointShufflePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.fixpointPartitions").map(_.toInt).getOrElse {
-      val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      math.min(session, math.max(1, spark.sparkContext.defaultParallelism))
-    }
-
-  private[graft] def fixpointSession(spark: SparkSession): SparkSession =
-    sessionWithPartitions(spark, fixpointShufflePartitions(spark))
-
-  private def sessionWithPartitions(spark: SparkSession, parts: Int): SparkSession =
-    if (parts.toString == spark.conf.get("spark.sql.shuffle.partitions")) spark
-    else {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      graft.functions.GraftFunctions.register(s2)
-      s2
-    }
-
-  /** Force `key`'s staged build in the CALLER's session, then read its
-    * parquet back in `session` with the registry's captured schema —
-    * the cross-session input hand-off both partition-policy clones use
-    * (no footer inference, same bytes).
-    */
-  private def stagedReadIn(session: SparkSession, spark: SparkSession, dir: String,
-      key: String)(force: => DataFrame): DataFrame = {
-    force
-    val e = stagedEntries(spark, dir).find(_.key == key).getOrElse(
-      throw new IllegalStateException(s"staged '$key' missing after forcing its build"))
-    session.read.schema(e.schema).parquet(e.path)
+    setPairsAbove(stagedReadIn(pairJoinSession(spark, bytes), spark, dir, groupsKey)(force),
+      p, q, bytes)
   }
 
   /** Deterministic BUCKET statistics of the unigram J ≥ 4/5 prefix
@@ -1196,7 +886,7 @@ object Similarity {
 
   /** The (token → canonical rank) table of a collapsed corpus — the
     * band construction documented on [[dfRankedSets]], factored out so
-    * the delta-merge path ([[pairsMerge]]) can rank a merged corpus
+    * the delta-merge path ([[newPairsFromTagged]]) can rank a merged corpus
     * once and remap both join sides from the same table.
     */
   private[ops] def dfRankTable(groups: DataFrame): DataFrame = {
@@ -2259,7 +1949,7 @@ object Similarity {
   private[graft] def stagedCoreness(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "coreness") {
       // runs under the FIXPOINT partition policy (coarse; see
-      // fixpointShufflePartitions) — a no-op clone on local sessions
+      // PartitionPolicy) — a no-op clone on local sessions
       val s2 = fixpointSession(spark)
       val e = stagedReadIn(s2, spark, dir, "set_pairs_45")(
         stagedSetPairs45(spark, dir)).select("ga", "gb")

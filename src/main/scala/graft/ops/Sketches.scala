@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -55,9 +56,9 @@ object Sketches {
     * h0..h{Bands-1}, keeping `keep`'s columns: one codegen'd loop per
     * set (graft.functions.MinHashSignature) — the nested-HOF
     * formulation evaluates 32·|toks| interpreted lambdas. Shared by
-    * q25's self-join candidate generation, the staged `minhash_bands`
-    * family and the sketch-label merge, so every side of a banding join
-    * bands identically by construction.
+    * q25's self-join candidate generation and the staged
+    * `minhash_bands` family, so every side of a banding join bands
+    * identically by construction.
     */
   private[graft] def withBandHashes(df: DataFrame, toksCol: String, keep: Seq[String]): DataFrame = {
     val rowsPerBand = NumPerm / Bands
@@ -103,7 +104,7 @@ object Sketches {
     * real footer stats.
     */
   private def stagedMinhashBands(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "minhash_bands")(
+    stagedTable(spark, dir, "minhash_bands")(
       withBandHashes(Similarity.stagedUnigramGroups(spark, dir), "toks", Seq("gid")))
 
   /** q25 — MinHash+LSH near-dup: per-doc signature = min of xxhash64
@@ -242,109 +243,32 @@ object Sketches {
     * beside `component_labels` (the exact twin), because a production
     * run materializes whichever label table its dedup path produced
     * and every downstream readout scans it. Built once per (session,
-    * corpus): banding join over the staged collapse → exact verify →
+    * corpus): candidates over the staged collapse → exact verify →
     * hash-min loop → doc expansion. All-long schema → exact parquet
     * round trip.
+    *
+    * Candidate strategy routed by the df statistic (VERDICT r12 #5,
+    * [[Similarity.zipfLikeDf]]): on Zipf-like corpora the
+    * canonical-order prefix join's candidates are exact (recall 1) AND
+    * linear in true near-dup density — strictly better than banding —
+    * so banding is reserved for flat-df corpora where prefix filtering
+    * has no pruning signal (LshAdvantageSpec's residual worst case).
+    * Either branch feeds the same exact verify at the same threshold,
+    * so the refinement invariant (q241) holds on both.
     */
   private[graft] def stagedSketchLabels(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "sketch_labels") {
+    stagedTable(spark, dir, "sketch_labels") {
       graft.functions.GraftFunctions.register(spark)
-      sketchLabelsOf(Similarity.stagedUnigramGroups(spark, dir),
-        Similarity.documentsSizeBytes(spark, dir))
+      val groups = Similarity.stagedUnigramGroups(spark, dir)
+      val cands =
+        if (Similarity.zipfLikeDf(groups)) Similarity.prefixJoinCandidates(groups, 4, 5)
+        else minhashBandCandidates(groups)
+      val edges = Similarity
+        .verifySetJaccardWithMembers(cands, groups, 0.8, Similarity.documentsSizeBytes(spark, dir))
+        .select(col("ga"), col("gb"))
+      val (labels, _) = Similarity.hashMinLabels(groups.select(col("gid")), edges)
+      Similarity.expandClusterLabels(groups, labels)
     }
-
-  /** The sketch-label build over an arbitrary collapsed corpus —
-    * [[stagedSketchLabels]]'s body, factored so the delta merge
-    * ([[sketchLabelsMerge]]) can build and compare base/cold states
-    * over sub-corpora. Candidate strategy routed by the df statistic
-    * (VERDICT r12 #5, [[Similarity.zipfLikeDf]]): on Zipf-like corpora
-    * the canonical-order prefix join's candidates are exact (recall 1)
-    * AND linear in true near-dup density — strictly better than
-    * banding — so banding is reserved for flat-df corpora where prefix
-    * filtering has no pruning signal (LshAdvantageSpec's residual
-    * worst case). Either branch feeds the same exact verify at the
-    * same threshold, so the refinement invariant (q241) holds on both.
-    */
-  private[graft] def sketchLabelsOf(groups: DataFrame, docBytes: BigInt): DataFrame = {
-    val threshold = 0.8
-    val cands =
-      if (Similarity.zipfLikeDf(groups)) Similarity.prefixJoinCandidates(groups, 4, 5)
-      else minhashBandCandidates(groups)
-    val edges = Similarity
-      .verifySetJaccardWithMembers(cands, groups, threshold, docBytes)
-      .select(col("ga"), col("gb"))
-    val (labels, _) = Similarity.hashMinLabels(groups.select(col("gid")), edges)
-    Similarity.expandClusterLabels(groups, labels)
-  }
-
-  /** Batch DELTA-MERGE for the sketch-label family — the last
-    * quadratic staged family to gain an incremental path (the
-    * cascade's exact families got theirs in q243–q245). Same
-    * construction as [[Similarity.labelsMerge]]: the delta re-keys
-    * through the tagged collapse merge, NEW qualifying edges can only
-    * involve a new token set (a base pair's Jaccard — and so its
-    * ≥ 0.8 qualification — is immutable under the append-only
-    * contract), and the base components continue as contracted
-    * super-nodes. What changes is only the CANDIDATE generator,
-    * routed by the same df statistic as the cold build: Zipf-like →
-    * the existing asymmetric prefix join
-    * ([[Similarity.newPairsFromTagged]] at 4/5 ≡ the 0.8 threshold);
-    * flat-df → the asymmetric banding join
-    * ([[minhashBandCandidatesDelta]] — delta-anchored first-collision
-    * emission over the SAME banded signatures, which are pure
-    * functions of the token set, so a pair collides incrementally iff
-    * it collides cold). Both branches feed the same exact verify, so
-    * merge ≡ recompute EXACTLY on both routes (DeltaMergeSpec pins
-    * each).
-    *
-    * Preconditions: the append-only ingest contract, and `baseLabels`
-    * built under the same route the merged corpus takes (a corpus
-    * whose df shape FLIPS the routing statistic across an ingest
-    * changes the cold build's candidate recall too — rebuild on a
-    * flip, exactly as a production run re-validates any frozen
-    * strategy choice when the data distribution moves).
-    */
-  def sketchLabelsMerge(baseGroups: DataFrame, baseLabels: DataFrame,
-      deltaDocToks: DataFrame, docBytes: BigInt): DataFrame = {
-    val tagged = Similarity.staged(
-      Similarity.collapseMergeTagged(baseGroups, deltaDocToks))
-    val groups = tagged.select(col("gid"), col("toks"), col("sz"), col("members"))
-    val newEdges =
-      if (Similarity.zipfLikeDf(groups))
-        Similarity.newPairsFromTagged(tagged, 4, 5, docBytes)
-          .select(col("ga"), col("gb"))
-      else
-        Similarity.verifySetJaccardWithMembersGeneral(
-            minhashBandCandidatesDelta(tagged), groups, 0.8, docBytes)
-          .select(col("ga"), col("gb"))
-    Similarity.labelsMergeFromTagged(tagged, baseLabels, newEdges)
-  }
-
-  /** [[minhashBandCandidates]]' DELTA-ANCHORED variant: candidate
-    * pairs whose a-side is a NEW group — base×base never re-joins
-    * (both signatures immutable, their collision already decided in
-    * the base build). Same banded signatures, same first-collision
-    * exactly-once emission ([[earlierBandCollision]]); the delta
-    * anchoring mirrors [[Similarity.prefixJoinCandidatesDelta]]: mixed
-    * pairs have exactly one valid orientation (a must be new),
-    * new×new pairs dedup on a.gid < b.gid. Output normalized
-    * least/greatest like every pair relation here.
-    */
-  private[ops] def minhashBandCandidatesDelta(tagged: DataFrame): DataFrame = {
-    val sides = withBandHashes(tagged, "toks", Seq("gid", "is_new"))
-    val banded = sides.select(
-      (col("gid") +: col("is_new") +: (0 until Bands).map(j => col(s"h$j"))) :+
-        posexplode(array((0 until Bands).map(j => col(s"h$j")): _*))
-          .as(Seq("band_id", "band_hash")): _*)
-    banded.filter(col("is_new")).as("a").join(banded.as("b"),
-        col("a.band_id") === col("b.band_id") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.gid") =!= col("b.gid") &&
-          (!col("b.is_new") || col("a.gid") < col("b.gid")) &&
-          !earlierBandCollision(Bands))
-      .select(least(col("a.gid"), col("b.gid")).as("ga"),
-        greatest(col("a.gid"), col("b.gid")).as("gb"))
-  }
 
   /** q26 — SimHash near-dup: 64-bit signature (sign of per-bit vote sums
     * over token hashes); candidate pairs share at least one of four

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -659,7 +660,7 @@ object TextOps {
     stagedTfPostings(spark, dir)
 
   private[graft] def stagedTfPostings(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "tf_postings")(
+    stagedTable(spark, dir, "tf_postings")(
       tfPostingsOf(Tables.documents(spark, dir)))
 
   /** The tf-postings build over an arbitrary documents relation — the
@@ -705,22 +706,12 @@ object TextOps {
     * tf-aggregate pass EACH time. One row per tokenized doc.
     */
   private[graft] def stagedDocLengths(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "doc_lengths") {
+    stagedTable(spark, dir, "doc_lengths") {
       docLengthsOfPostings(stagedTfPostings(spark, dir))
     }
 
   private[ops] def docLengthsOfPostings(postings: DataFrame): DataFrame =
     postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-
-  /** Batch DELTA-MERGE for the doc-lengths family — the same
-    * key-disjoint bare-union shape as [[tfPostingsMerge]] (per-document
-    * rows + the append-only contract ⇒ delta keys never collide with
-    * base keys), so the retrieval family's staged index state
-    * (tf_postings, doc_lengths, pos_postings) is incrementally
-    * maintainable end-to-end alongside postingStream.
-    */
-  def docLengthsMerge(baseDl: DataFrame, deltaDocs: DataFrame): DataFrame =
-    baseDl.unionByName(docLengthsOfPostings(tfPostingsOf(deltaDocs)))
 
   /** The corpus-derived query for q193/q198: the 3 highest-df terms,
     * ties broken by term — self-contained and oracle-replayable; a
@@ -738,7 +729,7 @@ object TextOps {
     * corpus. (term, df) are a string + long: exact parquet round trip.
     */
   private def stagedQueryTerms(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "query_terms")(
+    stagedTable(spark, dir, "query_terms")(
       topDfTerms(tfRelation(spark, dir)))
 
   /** The Okapi idf term (Lucene's +1 shift) over `df`/`n_docs` cols. */
@@ -1134,20 +1125,12 @@ object TextOps {
     * agnostic to that layout.
     */
   private[graft] def stagedPositionalPostings(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "pos_postings")(
+    stagedTable(spark, dir, "pos_postings")(
       posPostingsOf(Tables.documents(spark, dir)))
 
   private[ops] def posPostingsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("i", "term")))
       .select(col("term"), col("doc_id"), (col("i") + 1L).cast(LongType).as("pos"))
-
-  /** Batch DELTA-MERGE for the positional-postings family — per-(doc,
-    * pos) rows, key-disjoint from the base under the append-only
-    * contract, so the merge is a bare union like [[tfPostingsMerge]]
-    * (DeltaMergeSpec pins merge ≡ recompute for all three).
-    */
-  def posPostingsMerge(basePos: DataFrame, deltaDocs: DataFrame): DataFrame =
-    basePos.unionByName(posPostingsOf(deltaDocs))
 
   /** q221b — PHRASE MATCH OVER THE POSITIONAL INDEX: q221's documented
     * 100 TB swap-in made real (same semantics, same oracle VERBATIM —

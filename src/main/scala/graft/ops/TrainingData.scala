@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -556,7 +557,7 @@ object TrainingData {
     * just finished (the q108 recompute tax, one level up).
     */
   private[graft] def stagedDsirWeights(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "dsir_weights")(dsirWeightsOf(spark, dir))
+    stagedTable(spark, dir, "dsir_weights")(dsirWeightsOf(spark, dir))
 
   def q114DsirWeights(spark: SparkSession, dir: String): DataFrame =
     stagedDsirWeights(spark, dir).orderBy("doc_id")
@@ -845,7 +846,7 @@ object TrainingData {
     * replays the SAME staged table.
     */
   private[graft] def stagedBpeMerges(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "bpe_merges")(
+    stagedTable(spark, dir, "bpe_merges")(
       bpeMergeTrainFrom(Tables.documents(spark, dir)))
 
   private val bpeMergesCache =
@@ -853,14 +854,14 @@ object TrainingData {
 
   /** The staged trained merges collected to rank-ordered constants —
     * K ≤ [[BpeMergeCount]] rows, the sanctioned model-sized collect
-    * (IVF-centroid pattern); cached per staged table so repeated plan
-    * builds don't re-run the 12-row job.
+    * (IVF-centroid pattern); cached per staged table (its part files,
+    * which a rebuild renames) so repeated plan builds don't re-run the
+    * 12-row job.
     */
   private[graft] def trainedBpeMerges(spark: SparkSession, dir: String): Seq[(String, String)] = {
-    val e = Similarity.stagedEntry(spark, dir, "bpe_merges")(
-      bpeMergeTrainFrom(Tables.documents(spark, dir)))
-    bpeMergesCache.getOrElseUpdate(e.path,
-      spark.read.parquet(e.path).orderBy("rk").collect()
+    val merges = stagedBpeMerges(spark, dir)
+    bpeMergesCache.getOrElseUpdate(merges.inputFiles.sorted.mkString(","),
+      merges.orderBy("rk").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq)
   }
 
@@ -957,7 +958,7 @@ object TrainingData {
     * table, which is exactly what the registry entry does.
     */
   private[graft] def stagedCleanPack(spark: SparkSession, dir: String): DataFrame =
-    Similarity.stagedTable(spark, dir, "clean_pack") {
+    stagedTable(spark, dir, "clean_pack") {
       graft.functions.GraftFunctions.register(spark)
       packByTokens(TextOps.q107SpanDedup(spark, dir)
         .filter(col("n_kept") > 0)

@@ -111,7 +111,7 @@ object Canary {
     }
 
     // canary 0: the staged-cascade build, cold registry
-    graft.ops.Similarity.evictStagedSession(spark)
+    graft.stage.Staging.evictStagedSession(spark)
     val t0 = System.nanoTime()
     graft.ops.Similarity.q135StagingManifest(spark, work).collect()
     gate("staged_cascade_build", (System.nanoTime() - t0) / 1e9, "s", Nil)

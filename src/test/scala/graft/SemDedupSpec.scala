@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Similarity
+import graft.stage.Staging
 
 /** Hard guards for oracle-free q94 (SemDeDup): the k-means gate and
   * cosine threshold are engine-trained, so like q25/q26/q32b the
@@ -72,7 +73,7 @@ class SemDedupSpec extends SparkSpecBase {
     // that test no longer distinguishes train-vs-round-trip drift
     // within a session (round-14 ADVICE). Pin the round trip directly:
     // the staged read must equal a fresh in-memory training run.
-    val staged = Similarity.stagedTable(spark, dir, "semdedup_model")(
+    val staged = Staging.stagedTable(spark, dir, "semdedup_model")(
         Similarity.trainIvfModel(spark, dir)).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
     val fresh = Similarity.trainIvfModel(spark, dir).collect()

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpecBase
+import graft.stage.PartitionPolicy
 import org.apache.spark.sql.functions._
 
 /** Internals of the near-dup cascade, exercised on BOTH broadcast
@@ -264,25 +265,21 @@ class CascadeInternalsSpec extends SparkSpecBase {
     }
   }
 
-  test("pairJoinShufflePartitions: session under threshold, 128-floored fine regime, 4096 cap, conf override") {
+  test("pairJoinShufflePartitions: session under threshold, 128-floored fine regime, 4096 cap") {
     // session conf here is 4 (SparkSpecBase); policy constant = one
     // partition per 160 KB of compressed documents
     val kb160 = BigInt(160L << 10)
     // corpus under the session threshold -> session conf, no clone
-    assert(Similarity.pairJoinShufflePartitions(spark, kb160 * 2) == 4)
-    assert(Similarity.pairJoinSession(spark, kb160 * 2) eq spark)
+    assert(PartitionPolicy.pairJoinShufflePartitions(spark, kb160 * 2) == 4)
+    assert(PartitionPolicy.pairJoinSession(spark, kb160 * 2) eq spark)
     // outgrows the session -> floors at 128 (a merely proportional
     // count leaves the hot bucket whole — the measured 10x straggler)
-    assert(Similarity.pairJoinShufflePartitions(spark, kb160 * 10) == 128)
+    assert(PartitionPolicy.pairJoinShufflePartitions(spark, kb160 * 10) == 128)
     // beyond the floor it grows with the corpus, capped at 4096
-    assert(Similarity.pairJoinShufflePartitions(spark, kb160 * 500) == 500)
-    assert(Similarity.pairJoinShufflePartitions(spark, kb160 * 100000) == 4096)
-    // explicit override wins at any size
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.pairJoinPartitions", "7")
-    assert(Similarity.pairJoinShufflePartitions(s2, kb160 * 100000) == 7)
+    assert(PartitionPolicy.pairJoinShufflePartitions(spark, kb160 * 500) == 500)
+    assert(PartitionPolicy.pairJoinShufflePartitions(spark, kb160 * 100000) == 4096)
     // the clone carries the policy count and the session keeps its own
-    val clone = Similarity.pairJoinSession(spark, kb160 * 10)
+    val clone = PartitionPolicy.pairJoinSession(spark, kb160 * 10)
     assert(clone.conf.get("spark.sql.shuffle.partitions") == "128")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }

@@ -2,33 +2,51 @@ package graft.ops
 
 import graft.{SparkSpecBase, Tables}
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance for the staged families (round-12 VERDICT
-  * Next #4; round-13 Next #1/#6): the batch delta-merge entry points
-  * must be row-identical to a cold rebuild over the full corpus —
-  * q210's merge ≡ recompute contract, proven here for the bare-union
-  * class (tf_postings, doc_lengths, pos_postings), the exact-dup
-  * collapse ([[Similarity.collapseMerge]]), and the cascade's
-  * expensive families: the qualifying set pairs
-  * ([[Similarity.pairsMerge]] — re-keyed base pairs + ONE asymmetric
-  * delta-vs-(base ∪ delta) prefix join, never base×base again) and
-  * the component labels ([[Similarity.labelsMerge]] — hash-min over
-  * the contracted super-node graph, sized by the delta), on BOTH pair
-  * cascades (unigram at 4/5, shingle at 3/5 — the merge machinery is
-  * generic over the token-set column and threshold). The declared
-  * q242–q246 keys carry the same contract to the driver's DuckDB
-  * oracle; these tests pin it engine-side, including the cases the
-  * even/odd corpus split cannot reach: a delta doc relabeling a base
-  * group's gid (with and without edges), a delta group BRIDGING two
-  * base components, and empty deltas.
+  * Next #4; round-13 Next #1/#6): the batch delta-merge pieces must be
+  * row-identical to a cold rebuild over the full corpus — q210's
+  * merge ≡ recompute contract, proven here for the bare-union
+  * tf_postings merge, the exact-dup collapse
+  * ([[Similarity.collapseMerge]]), and the cascade's expensive
+  * families as q244–q246 compose them: the qualifying set pairs
+  * (re-keyed base pairs ∪ ONE asymmetric delta-vs-(base ∪ delta)
+  * prefix join, never base×base again) and the component labels
+  * (hash-min over the contracted super-node graph, sized by the
+  * delta), on BOTH pair cascades (unigram at 4/5, shingle at 3/5 — the
+  * merge machinery is generic over the token-set column and
+  * threshold). The declared q242–q246 keys carry the same contract to
+  * the DuckDB oracle; these tests pin it engine-side, including the
+  * cases the even/odd corpus split cannot reach: a delta doc
+  * relabeling a base group's gid (with and without edges), a delta
+  * group BRIDGING two base components, and empty deltas.
   */
 class DeltaMergeSpec extends SparkSpecBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
+
+  // the merges as q244/q246 (pairs) and q245 (labels) compose them
+  // from their staged pieces: the tagged collapse merge, then re-keyed
+  // base pairs ∪ verified new pairs, or label continuation over the
+  // new pairs alone
+  private def pairsMerge(baseGroups: DataFrame, basePairs: DataFrame,
+      delta: DataFrame, p: Int, q: Int, bytes: BigInt): DataFrame = {
+    val tagged = Similarity.collapseMergeTagged(baseGroups, delta).localCheckpoint(true)
+    Similarity.pairsRemapFromTagged(tagged, basePairs, bytes)
+      .unionByName(Similarity.newPairsFromTagged(tagged, p, q, bytes))
+  }
+
+  private def labelsMerge(baseGroups: DataFrame, baseLabels: DataFrame,
+      delta: DataFrame, p: Int, q: Int, bytes: BigInt): DataFrame = {
+    val tagged = Similarity.collapseMergeTagged(baseGroups, delta).localCheckpoint(true)
+    Similarity.labelsMergeFromTagged(tagged, baseLabels,
+      Similarity.newPairsFromTagged(tagged, p, q, bytes))
+  }
 
   test("tfPostingsMerge ≡ cold recompute on the real corpus (even/odd split)") {
     val docs = Tables.documents(spark, sf)
@@ -44,19 +62,6 @@ class DeltaMergeSpec extends SparkSpecBase {
     val base = TextOps.tfPostingsOf(docs)
     val merged = TextOps.tfPostingsMerge(base, docs.filter(lit(false)))
     assert(rows(merged) == rows(base))
-  }
-
-  test("docLengthsMerge / posPostingsMerge ≡ cold recompute (even/odd split)") {
-    val docs = Tables.documents(spark, sf)
-    val even = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
-    val odd = docs.filter(pmod(col("doc_id"), lit(2L)) === 1)
-    val dl = TextOps.docLengthsMerge(
-      TextOps.docLengthsOfPostings(TextOps.tfPostingsOf(even)), odd)
-    assert(rows(dl).nonEmpty)
-    assert(rows(dl) == rows(TextOps.docLengthsOfPostings(TextOps.tfPostingsOf(docs))))
-    val pp = TextOps.posPostingsMerge(TextOps.posPostingsOf(even), odd)
-    assert(rows(pp).nonEmpty)
-    assert(rows(pp) == rows(TextOps.posPostingsOf(docs)))
   }
 
   test("collapseMerge ≡ cold recompute on the real corpus (even/odd split)") {
@@ -91,7 +96,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     val toks = Similarity.docTokenSets(spark, sf)
     val base = Similarity.tokenSetGroupsBy(toks.filter(pmod(col("doc_id"), lit(2L)) === 0))
     val basePairs = Similarity.setPairsAbove(base, 4, 5, bytes)
-    val merged = Similarity.pairsMerge(base, basePairs,
+    val merged = pairsMerge(base, basePairs,
       toks.filter(pmod(col("doc_id"), lit(2L)) === 1), 4, 5, bytes)
     val cold = Similarity.setPairsAbove(
       Similarity.tokenSetGroupsBy(toks), 4, 5, bytes)
@@ -107,7 +112,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     val basePairs = Similarity.setPairsAbove(base, 4, 5, bytes)
     val (bl, _) = Similarity.hashMinLabels(base.select(col("gid")),
       basePairs.select(col("ga"), col("gb")))
-    val merged = Similarity.labelsMerge(base, Similarity.expandClusterLabels(base, bl),
+    val merged = labelsMerge(base, Similarity.expandClusterLabels(base, bl),
       toks.filter(pmod(col("doc_id"), lit(2L)) === 1), 4, 5, bytes)
     val coldGroups = Similarity.tokenSetGroupsBy(toks)
     val (cl, _) = Similarity.hashMinLabels(coldGroups.select(col("gid")),
@@ -137,7 +142,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     GraftFunctions.register(spark)
     val base = Similarity.tokenSetGroupsBy(toksDf(bridgeBase))
     val basePairs = Similarity.setPairsAbove(base, 4, 5, BigInt(1))
-    val merged = Similarity.pairsMerge(base, basePairs,
+    val merged = pairsMerge(base, basePairs,
       toksDf(bridgeDelta), 4, 5, BigInt(1))
     val cold = Similarity.setPairsAbove(
       Similarity.tokenSetGroupsBy(toksDf(bridgeBase ++ bridgeDelta)), 4, 5, BigInt(1))
@@ -158,7 +163,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     // precondition: two separate base components
     assert(baseLabels.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toList ==
       List((10L, 10L), (11L, 10L), (20L, 20L), (21L, 20L)))
-    val merged = Similarity.labelsMerge(base, baseLabels,
+    val merged = labelsMerge(base, baseLabels,
       toksDf(bridgeDelta), 4, 5, BigInt(1))
     assert(merged.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toList ==
       List((10L, 10L), (11L, 10L), (20L, 10L), (21L, 10L), (30L, 10L)))
@@ -172,7 +177,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     // component label must follow even though no new PAIR appears
     val base = Similarity.tokenSetGroupsBy(toksDf(Seq(10L -> (1L to 10L).toSeq, 11L -> (1L to 10L).toSeq)))
     val baseLabels = Seq((10L, 10L), (11L, 10L)).toDF("doc_id", "cluster_id")
-    val merged = Similarity.labelsMerge(base, baseLabels,
+    val merged = labelsMerge(base, baseLabels,
       toksDf(Seq(2L -> (1L to 10L).toSeq)), 4, 5, BigInt(1))
     assert(merged.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toList ==
       List((2L, 2L), (10L, 2L), (11L, 2L)))
@@ -183,12 +188,12 @@ class DeltaMergeSpec extends SparkSpecBase {
     val base = Similarity.tokenSetGroupsBy(toksDf(bridgeBase))
     val basePairs = Similarity.setPairsAbove(base, 4, 5, BigInt(1))
     val emptyToks = toksDf(bridgeBase).filter(lit(false))
-    assert(rows(Similarity.pairsMerge(base, basePairs, emptyToks, 4, 5, BigInt(1)))
+    assert(rows(pairsMerge(base, basePairs, emptyToks, 4, 5, BigInt(1)))
       == rows(basePairs))
     val (bl, _) = Similarity.hashMinLabels(base.select(col("gid")),
       basePairs.select(col("ga"), col("gb")))
     val baseLabels = Similarity.expandClusterLabels(base, bl)
-    assert(rows(Similarity.labelsMerge(base, baseLabels, emptyToks, 4, 5, BigInt(1)))
+    assert(rows(labelsMerge(base, baseLabels, emptyToks, 4, 5, BigInt(1)))
       == rows(baseLabels))
   }
 
@@ -219,7 +224,7 @@ class DeltaMergeSpec extends SparkSpecBase {
     val toks = Similarity.shingleDocSets(spark, sf)
     val base = Similarity.tokenSetGroupsBy(toks.filter(pmod(col("doc_id"), lit(2L)) === 0))
     val basePairs = Similarity.setPairsAbove(base, 3, 5, bytes)
-    val merged = Similarity.pairsMerge(base, basePairs,
+    val merged = pairsMerge(base, basePairs,
       toks.filter(pmod(col("doc_id"), lit(2L)) === 1), 3, 5, bytes)
     val cold = Similarity.setPairsAbove(
       Similarity.tokenSetGroupsBy(toks), 3, 5, bytes)
@@ -231,52 +236,5 @@ class DeltaMergeSpec extends SparkSpecBase {
     GraftFunctions.register(spark)
     val q246 = rows(Similarity.q246ShinglePairsDeltaMerge(spark, sf))
     assert(q246.nonEmpty && q246 == rows(Similarity.q55ShingleNeardup(spark, sf)))
-  }
-
-  test("sketchLabelsMerge ≡ cold sketch labels on the real corpus (BANDING route, even/odd split)") {
-    GraftFunctions.register(spark)
-    val bytes = Similarity.documentsSizeBytes(spark, sf)
-    val toks = Similarity.docTokenSets(spark, sf)
-    val base = Similarity.tokenSetGroupsBy(toks.filter(pmod(col("doc_id"), lit(2L)) === 0))
-    // the testdata's unigram vocabulary is dense → flat by the routing
-    // statistic on both the base and the merged corpus (LshAdvantageSpec
-    // pins the full-corpus route): this case exercises the asymmetric
-    // BANDING join
-    assert(!Similarity.zipfLikeDf(base), "fixture must exercise the banding route")
-    val baseLabels = Sketches.sketchLabelsOf(base, bytes)
-    val merged = Sketches.sketchLabelsMerge(base, baseLabels,
-      toks.filter(pmod(col("doc_id"), lit(2L)) === 1), bytes)
-    val cold = Sketches.sketchLabelsOf(Similarity.tokenSetGroupsBy(toks), bytes)
-    assert(rows(merged).nonEmpty)
-    assert(rows(merged) == rows(cold))
-  }
-
-  // hapax-dominated fixture for the PREFIX route: exact-dup group
-  // {10, 11} (toks 1-10) near-dups doc 20 (J = 9/11 ≥ 0.8); ten filler
-  // docs of unique tokens push the rare-df fraction over half; the
-  // delta doc 40 chains a new edge onto doc 20 (J(20,40) = 9/11) while
-  // staying under threshold vs the group (J = 8/12) — the component
-  // extends through the delta, labels continue from the base state.
-  private def zipfSketchBase: Seq[(Long, Seq[Long])] = Seq(
-    10L -> (1L to 10L).toSeq, 11L -> (1L to 10L).toSeq,
-    20L -> ((1L to 9L) :+ 11L).toSeq) ++
-    (0 until 10).map(i => (30L + i) -> (1000L + 100L * i to 1004L + 100L * i).toSeq)
-  private def zipfSketchDelta: Seq[(Long, Seq[Long])] =
-    Seq(40L -> ((1L to 8L) ++ Seq(11L, 12L)).toSeq)
-
-  test("sketchLabelsMerge ≡ cold on a Zipf-like corpus (PREFIX route; delta extends a base component)") {
-    GraftFunctions.register(spark)
-    val base = Similarity.tokenSetGroupsBy(toksDf(zipfSketchBase))
-    assert(Similarity.zipfLikeDf(base), "fixture must exercise the prefix route")
-    val baseLabels = Sketches.sketchLabelsOf(base, BigInt(1))
-    val merged = Sketches.sketchLabelsMerge(base, baseLabels,
-      toksDf(zipfSketchDelta), BigInt(1))
-    val cold = Sketches.sketchLabelsOf(
-      Similarity.tokenSetGroupsBy(toksDf(zipfSketchBase ++ zipfSketchDelta)), BigInt(1))
-    assert(rows(merged) == rows(cold))
-    // the delta doc joined the {10, 11, 20} component through doc 20
-    assert(merged.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toList
-      .filter(_._1 <= 40L).filterNot(t => t._1 >= 30L && t._1 < 40L) ==
-      List((10L, 10L), (11L, 10L), (20L, 10L), (40L, 10L)))
   }
 }

@@ -232,6 +232,23 @@ class EmbeddingCurationSpec extends SparkSpecBase {
     val frac = sketch.count { case (d, l) => exact(d) == l }.toDouble / sketch.size
     info(f"per-doc label agreement vs exact q62: $frac%.4f over ${sketch.size} docs")
     assert(frac >= 0.95, s"agreement $frac below the measured floor")
+
+    // a hapax-dominated corpus routes the sketch labels through the
+    // exact PREFIX join: exact dups {10, 11} near-dup 20 (J = 9/11),
+    // 40 chains onto 20 (J = 9/11) but not onto the group (J = 8/12),
+    // and ten filler docs of unique words stay alone
+    val zipf = tmpDir()
+    def words(ids: Seq[Int]) = ids.map(i => s"w$i").mkString(" ")
+    val docs = Seq(
+      10L -> words(1 to 10), 11L -> words(1 to 10), 20L -> words((1 to 9) :+ 11),
+      40L -> words((1 to 8) ++ Seq(11, 12))) ++
+      (0 until 10).map(i => (30L + i) -> (0 until 5).map(j => s"f${i}_$j").mkString(" "))
+    writeDocuments(zipf, docs.map { case (id, text) => (id, text, "en", "s", 1L) }: _*)
+    assert(Similarity.zipfLikeDf(Similarity.stagedUnigramGroups(spark, zipf)),
+      "fixture must exercise the prefix route")
+    assert(Sketches.q146SketchClusters(spark, zipf).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      (Seq(10L, 11L, 20L, 40L).map(_ -> 10L) ++ (30L to 39L).map(d => d -> d)).toMap)
   }
 
   test("q216: stuck dimensions flag dead via exact min=max; the live dimension's variance is the computational formula") {

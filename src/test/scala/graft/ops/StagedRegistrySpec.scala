@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.{SparkSpecBase, Tables}
 import graft.functions.GraftFunctions
+import graft.stage.Staging
 import org.apache.spark.sql.functions._
 
 /** The CROSS-QUERY staging registry (round-6): the exact-dup collapse,
@@ -180,7 +181,7 @@ class StagedRegistrySpec extends SparkSpecBase {
     // same key from two threads: exactly ONE build must run
     val builds = new AtomicInteger(0)
     val docs = Tables.documents(spark, dir).select("doc_id")
-    def one() = Similarity.stagedTable(spark, dir, "spec_same_key") {
+    def one() = Staging.stagedTable(spark, dir, "spec_same_key") {
       builds.incrementAndGet(); docs
     }
     val t1 = new Thread(() => { one().count(): Unit })
@@ -192,7 +193,7 @@ class StagedRegistrySpec extends SparkSpecBase {
     val aStarted = new CountDownLatch(1)
     val bStarted = new CountDownLatch(1)
     val ta = new Thread(() => {
-      Similarity.stagedTable(spark, dir, "spec_par_a") {
+      Staging.stagedTable(spark, dir, "spec_par_a") {
         aStarted.countDown()
         assert(bStarted.await(30, TimeUnit.SECONDS),
           "key B's build must be able to start while key A's build is in flight")
@@ -200,7 +201,7 @@ class StagedRegistrySpec extends SparkSpecBase {
       }: Unit
     })
     val tb = new Thread(() => {
-      Similarity.stagedTable(spark, dir, "spec_par_b") {
+      Staging.stagedTable(spark, dir, "spec_par_b") {
         assert(aStarted.await(30, TimeUnit.SECONDS))
         bStarted.countDown()
         docs
@@ -214,7 +215,7 @@ class StagedRegistrySpec extends SparkSpecBase {
     val dir = tmpDir()
     writeDocuments(dir, (1L, "a", "en", "s", 1L))
     var attempts = 0
-    def build() = Similarity.stagedTable(spark, dir, "spec_fail_key") {
+    def build() = Staging.stagedTable(spark, dir, "spec_fail_key") {
       attempts += 1
       if (attempts == 1) sys.error("transient build failure")
       Tables.documents(spark, dir).select("doc_id")
@@ -224,16 +225,52 @@ class StagedRegistrySpec extends SparkSpecBase {
     assert(attempts == 2)
   }
 
+  /** `body`'s result and the number of jobs it started on this thread:
+    * the jobs carry a thread-local tag, and a sentinel job run after
+    * `body` flushes the asynchronous listener bus up to that point.
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val prop = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
+          case Some(`tag`) => jobs.incrementAndGet(): Unit
+          case Some(t) if t == s"$tag-sentinel" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(prop, tag)
+      val out = body
+      sc.setLocalProperty(prop, s"$tag-sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get())
+    } finally {
+      sc.setLocalProperty(prop, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("spark.graft.stagingDir roots the staging tables; eviction deletes them") {
     val dir = tmpDir()
     writeDocuments(dir, (1L, "a b c", "en", "s", 5L))
     val root = tmpDir()
     spark.conf.set("spark.graft.stagingDir", root)
     try {
-      val n = Similarity.stagedTable(spark, dir, "spec_rooted") {
+      // a fresh build runs exactly one job, its write: rows and schema
+      // come from the write, so no read-back, footer inference or count
+      val (staged, jobs) = jobsOf(Staging.stagedTable(spark, dir, "spec_rooted") {
         Tables.documents(spark, dir).select("doc_id")
-      }.count()
-      assert(n == 1L)
+      })
+      assert(jobs == 1, s"a fresh staged build must run exactly 1 job, ran $jobs")
+      assert(staged.count() == 1L)
       def underRoot = {
         def walk(f: java.io.File): Seq[java.io.File] =
           f +: Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
@@ -241,11 +278,11 @@ class StagedRegistrySpec extends SparkSpecBase {
       }
       assert(underRoot.nonEmpty, s"staged table must land under $root")
       // the registry records the staged row count (manifest source)
-      val entry = Similarity.stagedEntries(spark, dir).find(_.key == "spec_rooted")
+      val entry = Staging.stagedEntries(spark, dir).find(_.key == "spec_rooted")
       assert(entry.exists(_.rows == 1L), s"entry must carry the staged row count: $entry")
-      Similarity.evictStagedSession(spark)
+      Staging.evictStagedSession(spark)
       assert(underRoot.isEmpty, "eviction must delete the session's staged files")
-      assert(Similarity.stagedEntries(spark, dir).isEmpty)
+      assert(Staging.stagedEntries(spark, dir).isEmpty)
     } finally spark.conf.unset("spark.graft.stagingDir")
   }
 
@@ -293,5 +330,14 @@ class StagedRegistrySpec extends SparkSpecBase {
     assert(m("component_labels") == Similarity.componentLabels(spark, sf).count())
     assert(m("unigram_groups") == Similarity.stagedUnigramGroups(spark, sf).count())
     assert(m("clean_pack") == TrainingData.q109CleanPack(spark, sf).count())
+    // the rows and schema each family recorded from its build equal
+    // what its staged parquet holds
+    val entries = Staging.stagedEntries(spark, sf).filter(e => m.contains(e.key))
+    assert(entries.map(_.key).toSet == m.keySet)
+    entries.foreach { e =>
+      val back = spark.read.parquet(e.path)
+      assert(e.schema == back.schema, s"${e.key}: recorded ${e.schema}, parquet ${back.schema}")
+      assert(e.rows == back.count(), s"${e.key}: recorded ${e.rows} rows")
+    }
   }
 }
