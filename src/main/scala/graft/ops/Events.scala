@@ -40,18 +40,21 @@ object Events {
     * long µs value (negative included: us·B is monotonic and the
     * magnitude stays under 38 digits) and any NON-NEGATIVE event_id
     * pack losslessly; event_id ≥ 0 is the one assumption (ids are
-    * 0-based by generation, and pmod unpacking folds a negative id
-    * into the wrong µs bucket silently, so the bound is spec-pinned in
-    * EventOpsSpec's pack case). (us, event_id) is unique per event, so
-    * argmin/argmax over the pack is exactly the struct tie rule, and a
-    * decimal buffer IS mutable — both aggregate phases stay
-    * HashAggregate with map-side partials.
+    * 0-based by generation). pmod unpacking would fold a negative id
+    * into the wrong µs bucket, so the pack raises on one instead (the
+    * `assert_true` guard of `Similarity.withSetMask`, written as the
+    * `raise_error` it expands to so a null id still packs to null).
+    * (us, event_id) is unique per event, so argmin/argmax over the pack
+    * is exactly the struct tie rule, and a decimal buffer IS mutable —
+    * both aggregate phases stay HashAggregate with map-side partials.
     */
   private val EventPackBase = // 10^19
     lit(new java.math.BigDecimal("10000000000000000000"))
 
   private def packUsEventId: org.apache.spark.sql.Column =
-    unix_micros(col("ts")).cast(DecimalType(20, 0)) * EventPackBase + col("event_id")
+    unix_micros(col("ts")).cast(DecimalType(20, 0)) * EventPackBase +
+      when(col("event_id") < 0L, raise_error(lit("packUsEventId: negative event_id")))
+        .otherwise(col("event_id"))
 
   private def unpackEventId(pk: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(pk, EventPackBase).cast(LongType)

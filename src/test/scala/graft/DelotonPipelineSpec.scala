@@ -2,7 +2,9 @@ package graft
 
 import graft.etl.DelotonPipeline
 import graft.serve.Endpoints
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
 
 /** Fixture replay of the full reference ETL (SURVEY.md §5.2.4): a
   * reconstructed Kafka-log batch (FIXTURES.md §1) through
@@ -150,7 +152,7 @@ class DelotonPipelineSpec extends SparkSpecBase {
 
   test("idempotent upsert skips existing keys (ON CONFLICT DO NOTHING)") {
     val u = DelotonPipeline.users(raw)
-    val existing = u.filter(org.apache.spark.sql.functions.col("user_id") === 815L)
+    val existing = u.filter(col("user_id") === 815L)
     val fresh = DelotonPipeline.upsertNew(u, existing, "user_id")
     assert(fresh.collect().map(_.getLong(0)).sorted.toSeq == Seq(816L, 817L))
   }
@@ -174,20 +176,98 @@ class DelotonPipelineSpec extends SparkSpecBase {
     assert(back == Map(815L -> "existing", 816L -> "fresh", 817L -> "fresher"))
   }
 
+  /** One request of each read endpoint's shape. */
+  private def endpointShapes(users: DataFrame, rides: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "ride_by_id" -> Endpoints.rideById(rides, 3L),
+    "riders" -> Endpoints.allRiders(users),
+    "rider_by_id" -> Endpoints.riderById(users, 816L),
+    "riders_by_gender" -> Endpoints.ridersByGender(users, "male"),
+    "riders_by_age" -> Endpoints.ridersByAge(users, None, Some(0), Some(200)),
+    "riders_of_age" -> Endpoints.ridersByAge(users, Some(65), None, None),
+    "rides_by_gender" -> Endpoints.ridesByGender(users, rides, "male"),
+    "rides_for_rider" -> Endpoints.ridesForRider(rides, 815L),
+    "daily" -> Endpoints.dailyRides(rides, None),
+    "daily_prefix" -> Endpoints.dailyRides(rides, Some((2024, Some(1), None))))
+
+  /** Runs `body` with parquet read by the V2 file source, which the
+    * served step passes through: the same files, scanned.
+    */
+  private def withParquetScan[T](body: => T): T = {
+    val key = "spark.sql.sources.useV1SourceList"
+    val v1 = spark.conf.get(key)
+    spark.conf.set(key, v1.split(",").filterNot(_ == "parquet").mkString(","))
+    try body finally spark.conf.set(key, v1)
+  }
+
+  private def localRelations(d: DataFrame): Seq[LocalRelation] =
+    d.queryExecution.analyzed.collect { case l: LocalRelation => l }
+
+  test("served tables answer every endpoint byte-identically to the parquet scan; an old handle keeps its snapshot") {
+    val dir = tmpDir()
+    val (usersPath, ridesPath) = (s"$dir/users", s"$dir/rides")
+    DelotonPipeline.users(raw).write.parquet(usersPath)
+    DelotonPipeline.rides(raw).coalesce(1).write.parquet(ridesPath)
+    def answers(): Seq[(String, Seq[String])] = {
+      val (users, rides) = (spark.read.parquet(usersPath), spark.read.parquet(ridesPath))
+      endpointShapes(users, rides).map { case (n, d) => n -> Endpoints.toJsonRecords(d).sorted }
+    }
+    def assertServedExactly(files: Int): Unit = {
+      assert(new java.io.File(ridesPath).list().count(_.endsWith(".parquet")) == files)
+      val served = answers()
+      val scanned = withParquetScan {
+        assert(localRelations(Endpoints.rideById(spark.read.parquet(ridesPath), 3L)).isEmpty,
+          "a V2 parquet read must keep the parquet scan")
+        answers()
+      }
+      assert(localRelations(Endpoints.rideById(spark.read.parquet(ridesPath), 3L)).nonEmpty,
+        "a small parquet table must be served from local memory")
+      served.zip(scanned).foreach { case ((name, s), (_, p)) => assert(s == p, s"$files file(s): $name") }
+      assert(served.forall(_._2.nonEmpty), served)
+    }
+    assertServedExactly(files = 1)
+
+    val before = spark.read.parquet(ridesPath)
+    assert(Endpoints.toJsonRecords(Endpoints.ridesForRider(before, 815L)).length == 1)
+    DelotonPipeline.rides(raw).withColumn("ride_id", col("ride_id") + 100L)
+      .coalesce(1).write.mode("append").parquet(ridesPath)
+    assertServedExactly(files = 2)
+    // the served handle keeps the listing it was created with; a re-read sees the append
+    assert(Endpoints.toJsonRecords(Endpoints.ridesForRider(before, 815L)).length == 1)
+    val after = spark.read.parquet(ridesPath)
+    assert(Endpoints.toJsonRecords(Endpoints.ridesForRider(after, 815L)).length == 2)
+    assert(Endpoints.toJsonRecords(Endpoints.rideById(after, 103L)).length == 1)
+
+    // after an overwrite, a handle that has served a request answers from
+    // its snapshot (its scan would fail on the deleted files); a re-read
+    // sees the new files
+    DelotonPipeline.rides(raw).withColumn("ride_id", col("ride_id") + 200L)
+      .coalesce(1).write.mode("overwrite").parquet(ridesPath)
+    assert(Endpoints.toJsonRecords(Endpoints.rideById(after, 103L)).length == 1)
+    val overwritten = spark.read.parquet(ridesPath)
+    assert(Endpoints.toJsonRecords(Endpoints.rideById(overwritten, 103L)).isEmpty)
+    assert(Endpoints.toJsonRecords(Endpoints.rideById(overwritten, 203L)).length == 1)
+  }
+
+  test("in-memory, graftlog and streaming tables pass through the served step untouched") {
+    val users = DelotonPipeline.users(raw)
+    val logRides = DelotonPipeline.rides(DelotonPipeline.readLogs(spark, multiStreamDir()))
+    assert(localRelations(users).isEmpty && localRelations(logRides).isEmpty)
+    endpointShapes(users, logRides).foreach { case (name, d) =>
+      assert(localRelations(d).isEmpty, s"$name: served introduced a LocalRelation\n${d.queryExecution.analyzed}")
+    }
+    def rows(d: DataFrame) = d.collect().toSeq.sortBy(_.getLong(0))
+    assert(rows(Endpoints.allRiders(users)) == rows(users))
+    val stream = spark.readStream.format("graftlog").load(multiStreamDir())
+      .select(col("offset").as("ride_id"))
+    assert(Endpoints.rideById(stream, 3L).isStreaming)
+  }
+
   test("toJsonRecords is byte-identical to Dataset.toJSON") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     import org.apache.spark.sql.types._
     val users = DelotonPipeline.users(raw)
     val rides = DelotonPipeline.rides(raw)
-    val shapes = Seq(
-      "ride_by_id" -> Endpoints.rideById(rides, 3L),
-      "riders" -> Endpoints.allRiders(users),
-      "rider_by_id" -> Endpoints.riderById(users, 816L),
-      "riders_by_gender" -> Endpoints.ridersByGender(users, "male"),
-      "riders_by_age" -> Endpoints.ridersByAge(users, None, Some(0), Some(200)),
-      "rides_by_gender" -> Endpoints.ridesByGender(users, rides, "male"),
-      "rides_for_rider" -> Endpoints.ridesForRider(rides, 815L),
-      "daily" -> Endpoints.dailyRides(rides, None),
+    val shapes = endpointShapes(users, rides) ++ Seq(
       "null fields" -> rides.withColumn("duration", lit(null).cast(DoubleType))
         .withColumn("user_id", lit(null).cast(LongType)),
       "empty" -> Endpoints.rideById(rides, -1L),

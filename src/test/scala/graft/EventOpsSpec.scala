@@ -199,6 +199,16 @@ class EventOpsSpec extends SparkSpecBase {
       (Long.MaxValue - 1L, 1L, T0 / 1000000L, 2L)), out.toSeq)
   }
 
+  test("q151 pack bounds: a negative event_id fails the query instead of unpacking into the wrong µs bucket") {
+    val dir = tmpDir()
+    writeEvents(dir,
+      (-1L, T0, 1L, "A", 0.0, "{}"),
+      (4L, T0 + Hour, 2L, "A", 0.0, "{}"))
+    val err = intercept[Throwable](Events.q151DebounceDedup(spark, dir).collect())
+    val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).take(8).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("negative event_id")), err)
+  }
+
   test("q152 anomalies: outlier beyond 3 sigma flags; sigma-0 type emits null z and never flags") {
     val dir = tmpDir()
     val zeros = (0 until 12).map(i =>

@@ -2,6 +2,7 @@ package graft
 
 import graft.etl.DelotonPipeline
 import graft.ops.{Relational, Similarity}
+import graft.serve.Endpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Attribute, RegExpExtractAll}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -674,5 +675,68 @@ class PlanQualitySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val hashed = collect(plan) { case e: ShuffleExchangeExec => e }.map(hashKeys).filter(_.nonEmpty)
     assert(hashed == Seq(Seq("user_id")), plan)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.size == 1, plan)
+  }
+
+  /** Broadcast-sized `users` and `rides` parquet tables with the columns
+    * the read endpoints touch: 40 users, 120 rides an hour apart.
+    */
+  private def servingTables(): (String, String) = {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir()
+    spark.range(40).select(col("id").as("user_id"),
+      when(col("id") % 2 === 0, "male").otherwise("female").as("gender"),
+      (col("id") + 20).cast("int").as("age"))
+      .coalesce(1).write.parquet(s"$dir/users")
+    spark.range(120).select(col("id").as("ride_id"), (col("id") % 40).as("user_id"),
+      timestamp_seconds(lit(1704067200L) + col("id") * 3600L).as("start_time"))
+      .coalesce(1).write.parquet(s"$dir/rides")
+    (s"$dir/users", s"$dir/rides")
+  }
+
+  test("served endpoints: once a handle has served a request, a filter request runs no job") {
+    val (usersPath, ridesPath) = servingTables()
+    val users = spark.read.parquet(usersPath)
+    val rides = spark.read.parquet(ridesPath)
+    // the first request on each handle collects its rows once
+    assert(Endpoints.toJsonRecords(Endpoints.allRiders(users)).length == 40)
+    assert(Endpoints.toJsonRecords(Endpoints.ridesForRider(rides, 0L)).length == 3)
+    Seq(
+      "rideById" -> (() => Endpoints.rideById(rides, 3L)),
+      "riderById" -> (() => Endpoints.riderById(users, 7L)),
+      "ridersByGender" -> (() => Endpoints.ridersByGender(users, "male")),
+      "ridersByAge" -> (() => Endpoints.ridersByAge(users, None, Some(25), Some(30))),
+      "ridesForRider" -> (() => Endpoints.ridesForRider(rides, 7L)),
+      "dailyRides" -> (() => Endpoints.dailyRides(rides, Some((2024, Some(1), Some(2)))))
+    ).foreach { case (name, request) =>
+      val (json, jobs) = jobsOf(Endpoints.toJsonRecords(request()))
+      assert(json.nonEmpty, name)
+      assert(jobs == 0, s"$name ran $jobs job(s) over a served table")
+    }
+  }
+
+  test("served endpoints: a table over the file-byte or the row cap keeps the parquet scan and its filter") {
+    import org.apache.spark.sql.functions._
+    val dir = tmpDir()
+    // 18,000 rows of poorly compressible doubles: over the 1 MiB byte cap only
+    spark.range(18000).select(col("id").as("ride_id") +: (1 to 10).map(i => rand(i.toLong).as(s"x$i")): _*)
+      .coalesce(1).write.parquet(s"$dir/wide")
+    // 30,000 sequential ids in far less than 1 MiB: over the 20,000-row cap only
+    spark.range(30000).select(col("id").as("user_id")).coalesce(1).write.parquet(s"$dir/long")
+    // the gate is the served step's own: a larger broadcast threshold does not widen it
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
+    try {
+      val wide = spark.read.parquet(s"$dir/wide")
+      assert(wide.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 20))
+      val ride = physical(Endpoints.rideById(wide, 3L))
+      assert(ride.contains("FileScan parquet") && ride.contains("EqualTo(ride_id,3)"), ride)
+      val long = spark.read.parquet(s"$dir/long")
+      assert(long.queryExecution.optimizedPlan.stats.sizeInBytes < (1L << 20))
+      val rider = physical(Endpoints.riderById(long, 7L))
+      assert(rider.contains("FileScan parquet") && rider.contains("EqualTo(user_id,7)"), rider)
+      // the capped collect that found too many rows is not repeated: a
+      // later request on the handle runs only its own scan
+      val (json, jobs) = jobsOf(Endpoints.toJsonRecords(Endpoints.riderById(long, 8L)))
+      assert(json == Seq("""{"user_id":8}""") && jobs == 1, s"$jobs job(s)")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

@@ -225,39 +225,6 @@ class StagedRegistrySpec extends SparkSpecBase {
     assert(attempts == 2)
   }
 
-  /** `body`'s result and the number of jobs it started on this thread:
-    * the jobs carry a thread-local tag, and a sentinel job run after
-    * `body` flushes the asynchronous listener bus up to that point.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val prop = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(prop))) match {
-          case Some(`tag`) => jobs.incrementAndGet(): Unit
-          case Some(t) if t == s"$tag-sentinel" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(prop, tag)
-      val out = body
-      sc.setLocalProperty(prop, s"$tag-sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty(prop, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("spark.graft.stagingDir roots the staging tables; eviction deletes them") {
     val dir = tmpDir()
     writeDocuments(dir, (1L, "a b c", "en", "s", 5L))
