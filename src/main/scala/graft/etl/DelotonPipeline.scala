@@ -96,20 +96,6 @@ object DelotonPipeline {
     sum(when(col("is_marker"), 1).otherwise(0)).over(Window.partitionBy("stream").orderBy("offset")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
-  /** Parse + sessionize the raw messages: adds line timestamp, line-type
-    * flags and the running `ride_id` (count of ride-separator markers so
-    * far within the stream).
-    */
-  def parsed(raw: DataFrame): DataFrame =
-    withLog(raw)
-      .withColumn("ts", lineTs)
-      .withColumn("is_marker", isMarker)
-      .withColumn("is_start", line.contains("Getting user data from server"))
-      .withColumn("is_user", isUser)
-      .withColumn("is_ride", isRide)
-      .withColumn("is_telemetry", isTelemetry)
-      .withColumn("ride_id", rideSeq)
-
   /** `users` table (reference main.py:127-137): parsed from the
     * python-dict-literal user lines, honorific-stripped, postcode from
     * the last address field, epoch-ms dates converted, first occurrence

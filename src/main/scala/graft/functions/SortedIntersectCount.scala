@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,143 +81,4 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session registration for the engine's native expressions (SQL name +
-  * `call_function` access). Idempotent.
-  */
-object GraftFunctions {
-
-  /** Resolve `shingle_hashes`'s second argument to the shingle size at
-    * registration time. The size shapes the generated kernel call, so it
-    * must be a compile-time constant: anything non-foldable or
-    * non-integral (e.g. a column, or a BIGINT wider than Int) used to
-    * surface as an opaque NPE/ClassCastException from `eval(null)` —
-    * fail with a real error message instead.
-    */
-  private[functions] def shingleN(e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"shingle_hashes: shingle size must be a literal constant, got non-foldable ${e.sql}")
-    e.eval(null) match {
-      case i: Int if i >= 1 => i
-      case l: Long if l >= 1 && l <= Int.MaxValue => l.toInt
-      case s: Short if s >= 1 => s.toInt
-      case b: Byte if b >= 1 => b.toInt
-      case other => throw new IllegalArgumentException(
-        s"shingle_hashes: shingle size must be a positive integer literal, got " +
-          s"${if (other == null) "NULL" else s"$other: ${e.dataType.simpleString}"}")
-    }
-  }
-
-  /** A foldable string-array argument (e.g. `lit(Array("a", "b"))`)
-    * extracted to constants at expression-build time — the carrier for
-    * model-sized trained tables baked into a kernel (bpe_token_count's
-    * merge rules).
-    */
-  private[functions] def stringArrayArg(name: String)(
-      e: org.apache.spark.sql.catalyst.expressions.Expression): Seq[String] = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$name: expected a foldable string array, got non-foldable ${e.sql}")
-    e.eval(null) match {
-      case d: org.apache.spark.sql.catalyst.util.ArrayData
-          if e.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-        (0 until d.numElements()).map { i =>
-          val s = d.getUTF8String(i)
-          if (s == null) throw new IllegalArgumentException(
-            s"$name: NULL element at index $i of the foldable string array")
-          s.toString
-        }
-      case other => throw new IllegalArgumentException(
-        s"$name: expected a foldable string array, got $other: ${e.dataType.simpleString}")
-    }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("float_vec_dot",
-      exprs => FloatVecDot(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(exprs.head, 32), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs.head, shingleN(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("gram_hashes",
-      exprs => GramHashes(exprs.head, shingleN(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("shingle_stats",
-      exprs => ShingleStats(exprs.head, shingleN(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("prefix_intersect_count",
-      exprs => PrefixIntersectCount(exprs.head, exprs(1), exprs(2), exprs(3)), "built-in")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => BloomMightContain(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      exprs => WordNgrams(exprs.head, shingleN(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("bpe_token_count",
-      exprs => BpeTokenCount(exprs.head,
-        stringArrayArg("bpe_token_count.pats")(exprs(1)),
-        stringArrayArg("bpe_token_count.reps")(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("morton_interleave",
-      exprs => MortonInterleave(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("top_k_struct",
-      exprs => TopKStruct(exprs.head, exprs(1)), "built-in")
-  }
-}
-
-/** `SparkSessionExtensions` hook so deployments can load the engine's
-  * native functions at session build time
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`) instead of
-  * calling [[GraftFunctions.register]] per session. Injects the same
-  * four expressions as [[GraftFunctions.register]] so the two
-  * registration paths yield identical sessions.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.SparkSessionExtensions
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  private def inject(e: SparkSessionExtensions, name: String, clazz: Class[_],
-      builder: Seq[Expression] => Expression): Unit =
-    e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name), builder))
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    inject(e, "sorted_intersect_count", classOf[SortedIntersectCount],
-      exprs => SortedIntersectCount(exprs.head, exprs(1)))
-    inject(e, "float_vec_dot", classOf[FloatVecDot],
-      exprs => FloatVecDot(exprs.head, exprs(1)))
-    inject(e, "minhash_signature", classOf[MinHashSignature],
-      exprs => MinHashSignature(exprs.head, 32))
-    inject(e, "simhash64", classOf[SimHash64],
-      exprs => SimHash64(exprs.head))
-    inject(e, "shingle_hashes", classOf[ShingleHashes],
-      exprs => ShingleHashes(exprs.head, GraftFunctions.shingleN(exprs(1))))
-    inject(e, "gram_hashes", classOf[GramHashes],
-      exprs => GramHashes(exprs.head, GraftFunctions.shingleN(exprs(1))))
-    inject(e, "shingle_stats", classOf[ShingleStats],
-      exprs => ShingleStats(exprs.head, GraftFunctions.shingleN(exprs(1))))
-    inject(e, "prefix_intersect_count", classOf[PrefixIntersectCount],
-      exprs => PrefixIntersectCount(exprs.head, exprs(1), exprs(2), exprs(3)))
-    inject(e, "bloom_might_contain", classOf[BloomMightContain],
-      exprs => BloomMightContain(exprs.head, exprs(1)))
-    inject(e, "word_ngrams", classOf[WordNgrams],
-      exprs => WordNgrams(exprs.head, GraftFunctions.shingleN(exprs(1))))
-    inject(e, "bpe_token_count", classOf[BpeTokenCount],
-      exprs => BpeTokenCount(exprs.head,
-        GraftFunctions.stringArrayArg("bpe_token_count.pats")(exprs(1)),
-        GraftFunctions.stringArrayArg("bpe_token_count.reps")(exprs(2))))
-    inject(e, "morton_interleave", classOf[MortonInterleave],
-      exprs => MortonInterleave(exprs.head, exprs(1)))
-    inject(e, "top_k_struct", classOf[TopKStruct],
-      exprs => TopKStruct(exprs.head, exprs(1)))
-    // plan-policy guard: the PlanQualitySpec cartesian ban, enforced at
-    // runtime for arbitrary user queries (see CartesianGuardRule). Two
-    // hooks so the guard survives spark.sql.adaptive.enabled=false:
-    // query-stage prep (AQE path) + columnar pre-transition (always-on
-    // path in QueryExecution.preparations).
-    e.injectQueryStagePrepRule(session => graft.plans.CartesianGuardRule(session))
-    e.injectColumnar(session => new graft.plans.CartesianGuardColumnarRule(session))
-  }
 }

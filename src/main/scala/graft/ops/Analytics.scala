@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.bloomMightContain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -162,13 +163,12 @@ object Analytics {
     * by construction.)
     */
   def q95BloomSemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val high = Tables.orders(spark, dir)
       .filter(col("o_totalprice") > 450000.0)
       .select("o_custkey")
     val bloom = bloomOf(high, "o_custkey", numBits = 1 << 17, k = 5)
     Tables.customer(spark, dir)
-      .filter(call_function("bloom_might_contain", lit(bloom), col("c_custkey")))
+      .filter(bloomMightContain(bloom, col("c_custkey")))
       .join(high, col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name", "c_acctbal")
       .orderBy("c_custkey")

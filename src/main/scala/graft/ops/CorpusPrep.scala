@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.shingleHashes
 import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -61,10 +62,9 @@ object CorpusPrep {
     */
   private[graft] def stagedPrepGroups(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "prep_groups") {
-      graft.functions.GraftFunctions.register(spark)
       Similarity.tokenSetGroupsBy(
         stagedPrepDeduped(spark, dir).select(col("doc_id"),
-          call_function("shingle_hashes", col("toks"), lit(1)).as("toks")))
+          shingleHashes(col("toks"), 1).as("toks")))
     }
 
   /** The staged qualifying pairs at J ≥ 4/5 OVER the prep collapse —
@@ -76,7 +76,6 @@ object CorpusPrep {
     */
   private[graft] def stagedPrepPairs45(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "prep_pairs_45") {
-      graft.functions.GraftFunctions.register(spark)
       // pair-join partition policy (see stagedSetPairs45): the scrubbed
       // prep collapse feeds the same candidate+verify join shape
       Similarity.setPairsOverStagedGroups(spark, dir, "prep_groups",
@@ -117,7 +116,6 @@ object CorpusPrep {
     * refactor can't silently regress the reuse.
     */
   def q67CorpusPrep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val deduped = stagedPrepDeduped(spark, dir)
     val groups = stagedPrepGroups(spark, dir)
     val survivors = Similarity
@@ -145,7 +143,6 @@ object CorpusPrep {
     * stages.
     */
   def q112PrepPipelineV2(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val deduped = stagedPrepDeduped(spark, dir)
       .select("doc_id", "clean_text", "toks")
     // spans and toksP share deduped's lineage — rename the span-side key
@@ -184,7 +181,6 @@ object CorpusPrep {
     * remaining dropped docs.
     */
   def q72DedupReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // groups and verified pairs come from the cross-query staging
     // registry (the round-5 regression re-ran the whole cascade here):
     // the report is a pure reclassification of the staged pairs

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{floatVecDot, prefixIntersectCount, shingleHashes, sortedIntersectCount, topKStruct}
 import graft.stage.PartitionPolicy.{fixpointSession, pairJoinSession}
 import graft.stage.Staging
 import graft.stage.Staging.{stagedEntries, stagedReadIn, stagedTable}
@@ -27,14 +28,13 @@ object Similarity {
   /** Dot product / norm via the native codegen loop
     * ([[graft.functions.FloatVecDot]]) — same left-to-right double fold
     * as the zip_with/aggregate formulation (bit-identical results), one
-    * fused loop instead of per-element interpreted lambdas. Callers must
-    * have run GraftFunctions.register on the session.
+    * fused loop instead of per-element interpreted lambdas.
     */
   private[ops] def dot(a: Column, b: Column): Column =
-    call_function("float_vec_dot", a, b)
+    floatVecDot(a, b)
 
   private[ops] def norm(a: Column): Column =
-    sqrt(call_function("float_vec_dot", a, a))
+    sqrt(floatVecDot(a, a))
 
   /** The ANN/kNN read-path k-cut, shared by q22/q123/q32-family/q131
     * (q115/q120/q141 inline the same shape with extra carried columns):
@@ -66,10 +66,9 @@ object Similarity {
     * knob per session and reclaim it.
     */
   private[graft] def topKPerQuery(df: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col("qid"), struct((-col("sim")).as("ns"), col("tid")).as("s"))
       .groupBy("qid")
-      .agg(call_function("top_k_struct", col("s"), lit(k)).as("top"))
+      .agg(topKStruct(col("s"), k).as("top"))
       .select(col("qid"), posexplode(col("top")).as(Seq("i", "t")))
       .select(col("qid"), (col("i") + 1L).cast(LongType).as("rk"),
         col("t.tid").as("tid"), (-col("t.ns")).as("sim"))
@@ -90,13 +89,12 @@ object Similarity {
     * already carry.
     */
   private[graft] def docTokenSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // shingle_hashes(·, 1) ≡ sort_array(array_distinct(transform(·,
     // xxhash64))) — same token ids, but one JIT'd kernel instead of an
     // interpreted HOF chain re-evaluated at every optimizer inlining
     // site (the same CodegenFallback trap q55's build hit)
     Tables.documents(spark, dir).select(col("doc_id"),
-        call_function("shingle_hashes", split(col("text"), " "), lit(1)).as("toks"))
+        shingleHashes(split(col("text"), " "), 1).as("toks"))
       .withColumn("sz", size(col("toks")))
   }
 
@@ -217,15 +215,12 @@ object Similarity {
   private[ops] def prefixJoinCandidatesDelta(rankedTagged: DataFrame,
       p: Int, q: Int): DataFrame = {
     val pref = rankedTagged
-      .withColumn("pre", slice(col("toks"), lit(1), expr(s"sz - (($p*sz + ${q - 1}) div $q) + 1")))
+      .withColumn("pre", ppjoinPrefix(p, q))
       .select(col("gid"), col("sz"), col("is_new"), col("pre"),
         posexplode(col("pre")).as(Seq("pos", "tok_id")))
-    pref.filter(col("is_new")).as("a").join(pref.as("b"), expr(
-        "a.tok_id = b.tok_id AND a.gid <> b.gid" +
-          " AND ((NOT b.is_new) OR a.gid < b.gid)" +
-          s" AND b.sz BETWEEN ($p*a.sz + ${q - 1}) div $q AND ($q*a.sz) div $p" +
-          " AND prefix_intersect_count(a.pre, a.pos, b.pre, b.pos) = 0" +
-          s" AND least(a.sz - a.pos, b.sz - b.pos) >= ($p*(a.sz + b.sz) + ${p + q - 1}) div ${p + q}"))
+    pref.filter(col("is_new")).as("a").join(pref.as("b"),
+        ppjoinCandidate(p, q, "a.gid <> b.gid AND ((NOT b.is_new) OR a.gid < b.gid)") &&
+          ppjoinPositionFilter(p, q))
       .select(least(col("a.gid"), col("b.gid")).as("ga"),
         greatest(col("a.gid"), col("b.gid")).as("gb"))
   }
@@ -332,73 +327,82 @@ object Similarity {
       .select(col("doc_id"), col("cluster_id"))
   }
 
-  /** The delta-merge DEMO families: the declared merge keys (q244/q245)
-    * exercise one shared even/odd split of the corpus — base = even
-    * doc_ids (yesterday's staged state), delta = odd doc_ids (today's
-    * ingest) — and each stage of that state is itself a cross-query
-    * staged family, exactly as a production ingest would find it: the
-    * base collapse, its qualifying pairs (built under the pair-join
-    * partition policy), its component labels, the tagged collapse
-    * merge, and the delta join's verified new pairs are each built
-    * ONCE per (session, corpus) and shared by every merge key.
-    * Before this, q244 and q245 EACH re-ran the cold base pair join
-    * AND the asymmetric delta candidate join per call — together the
-    * two most expensive keys of the whole bench (isolated min-of-3 at
-    * sf0.1: 11.6 s + 15.5 s), all of it duplicated work that a real
-    * ingest pays exactly once. Not in [[ManifestFamilies]]: the
-    * manifest reports the production pipeline's inventory, and these
-    * (plus the merged-state [[stagedMergePairs]]/[[stagedMergeLabels]])
-    * are the demo keys' ingest fixture.
+  /** A delta-merge DEMO family: the declared merge keys (q244-q246)
+    * exercise one even/odd split of the corpus — base = even doc_ids
+    * (yesterday's staged state), delta = odd doc_ids (today's ingest) —
+    * and each stage of that state is itself a cross-query staged
+    * family, as a production ingest would find it: the base collapse
+    * `<key>_base_groups`, its qualifying pairs `<key>_base_pairs`
+    * (built under the pair-join partition policy), the tagged collapse
+    * merge `<key>_tagged`, the delta join's verified new pairs
+    * `<key>_fresh_pairs` and the merged pairs `<key>_pairs`, each built
+    * once per (session, corpus) and shared by every merge key. The
+    * families differ only in the doc token sets and the threshold p/q.
+    * Not in [[ManifestFamilies]]: the manifest reports the production
+    * pipeline's inventory, and these are the demo keys' ingest fixture.
     */
-  private[graft] def stagedMergeBaseGroups(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_base_groups")(
-      tokenSetGroupsBy(docTokenSets(spark, dir)
-        .filter(pmod(col("doc_id"), lit(2L)) === 0)))
+  private final class DeltaMergeFamily(key: String,
+      docSets: (SparkSession, String) => DataFrame, p: Int, q: Int) {
+    private def split(spark: SparkSession, dir: String, parity: Int): DataFrame =
+      docSets(spark, dir).filter(pmod(col("doc_id"), lit(2L)) === parity)
 
-  private[graft] def stagedMergeBasePairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_base_pairs")(
-      setPairsOverStagedGroups(spark, dir, "merge_base_groups",
-        stagedMergeBaseGroups(spark, dir), 4, 5))
+    def baseGroups(spark: SparkSession, dir: String): DataFrame =
+      stagedTable(spark, dir, s"${key}_base_groups")(tokenSetGroupsBy(split(spark, dir, 0)))
 
-  private[graft] def stagedMergeBaseLabels(spark: SparkSession, dir: String): DataFrame =
+    def basePairs(spark: SparkSession, dir: String): DataFrame =
+      stagedTable(spark, dir, s"${key}_base_pairs")(
+        setPairsOverStagedGroups(spark, dir, s"${key}_base_groups",
+          baseGroups(spark, dir), p, q))
+
+    def tagged(spark: SparkSession, dir: String): DataFrame =
+      stagedTable(spark, dir, s"${key}_tagged")(
+        collapseMergeTagged(baseGroups(spark, dir), split(spark, dir, 1)))
+
+    /** The asymmetric delta join's verified new pairs — the expensive
+      * half of every merge, built under the pair-join partition policy
+      * ([[graft.stage.PartitionPolicy]], same session-clone discipline
+      * as [[stagedSetPairs45]]).
+      */
+    def freshPairs(spark: SparkSession, dir: String): DataFrame =
+      stagedTable(spark, dir, s"${key}_fresh_pairs") {
+        val bytes = documentsSizeBytes(spark, dir)
+        newPairsFromTagged(stagedReadIn(pairJoinSession(spark, bytes), spark, dir,
+          s"${key}_tagged")(tagged(spark, dir)), p, q, bytes)
+      }
+
+    /** The MERGED pair relation — the merge's two halves (surviving base
+      * pairs re-keyed over the staged tagged merge,
+      * [[pairsRemapFromTagged]]; verified new pairs from the staged
+      * asymmetric delta join, [[newPairsFromTagged]]) unioned
+      * and staged: the post-ingest pair state a production
+      * merge re-materializes per ingest batch.
+      */
+    def pairs(spark: SparkSession, dir: String): DataFrame =
+      stagedTable(spark, dir, s"${key}_pairs") {
+        pairsRemapFromTagged(tagged(spark, dir), basePairs(spark, dir),
+          documentsSizeBytes(spark, dir))
+          .unionByName(freshPairs(spark, dir))
+      }
+  }
+
+  /** The unigram family: [[docTokenSets]] at q21's J ≥ 4/5. */
+  private val UnigramMerge = new DeltaMergeFamily("merge", docTokenSets, 4, 5)
+
+  /** The SHINGLE-cascade twin — the same even/odd ingest split
+    * maintained by the SAME merge machinery with nothing changed but
+    * the token space (word 3-grams, [[shingleDocSets]]) and the
+    * threshold (q55's J ≥ 3/5): q246 carries the merge's genericity
+    * over the token-set column and (p, q) to the DuckDB oracle on a
+    * second cascade.
+    */
+  private val ShingleMerge = new DeltaMergeFamily("merge_shingle", shingleDocSets, 3, 5)
+
+  private def stagedMergeBaseLabels(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "merge_base_labels") {
-      val base = stagedMergeBaseGroups(spark, dir)
+      val base = UnigramMerge.baseGroups(spark, dir)
       val (bl, _) = hashMinLabels(base.select(col("gid")),
-        stagedMergeBasePairs(spark, dir).select(col("ga"), col("gb")))
+        UnigramMerge.basePairs(spark, dir).select(col("ga"), col("gb")))
       expandClusterLabels(base, bl)
-    }
-
-  private[graft] def stagedMergeTagged(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_tagged")(
-      collapseMergeTagged(stagedMergeBaseGroups(spark, dir),
-        docTokenSets(spark, dir).filter(pmod(col("doc_id"), lit(2L)) === 1)))
-
-  /** The asymmetric delta join's verified new pairs, staged — the
-    * expensive half of every merge, shared by q244 and q245 and built
-    * under the pair-join partition policy
-    * ([[graft.stage.PartitionPolicy]], same session-clone discipline as
-    * [[stagedSetPairs45]]).
-    */
-  private[graft] def stagedMergeFreshPairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_fresh_pairs") {
-      val bytes = documentsSizeBytes(spark, dir)
-      newPairsFromTagged(stagedReadIn(pairJoinSession(spark, bytes), spark, dir,
-        "merge_tagged")(stagedMergeTagged(spark, dir)), 4, 5, bytes)
-    }
-
-  /** The MERGED pair relation — the merge's two halves (surviving base
-    * pairs re-keyed over the staged tagged merge,
-    * [[pairsRemapFromTagged]]; verified new pairs from the staged
-    * asymmetric delta join, [[newPairsFromTagged]]) unioned
-    * and staged: the post-ingest `set_pairs_45` state a production
-    * merge re-materializes per ingest batch.
-    */
-  private[graft] def stagedMergePairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_pairs") {
-      val tagged = stagedMergeTagged(spark, dir)
-      pairsRemapFromTagged(tagged, stagedMergeBasePairs(spark, dir),
-        documentsSizeBytes(spark, dir))
-        .unionByName(stagedMergeFreshPairs(spark, dir))
     }
 
   /** The MERGED doc-level labels — [[labelsMergeFromTagged]] (CC
@@ -406,10 +410,10 @@ object Similarity {
     * tagged merge, base labels and new pairs, staged: the post-ingest
     * `component_labels` state.
     */
-  private[graft] def stagedMergeLabels(spark: SparkSession, dir: String): DataFrame =
+  private def stagedMergeLabels(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "merge_labels") {
-      labelsMergeFromTagged(stagedMergeTagged(spark, dir),
-        stagedMergeBaseLabels(spark, dir), stagedMergeFreshPairs(spark, dir))
+      labelsMergeFromTagged(UnigramMerge.tagged(spark, dir),
+        stagedMergeBaseLabels(spark, dir), UnigramMerge.freshPairs(spark, dir))
     }
 
   /** q244 — the set-pairs delta-merge as a declared, oracle-checked
@@ -418,16 +422,15 @@ object Similarity {
     * exactly the state a production ingest starts from), DELTA = odd
     * doc_id folded in via [[pairsRemapFromTagged]] and
     * [[newPairsFromTagged]], the merged pairs staged
-    * ([[stagedMergePairs]] — the post-ingest state the next day's
+    * (`merge_pairs` — the post-ingest state the next day's
     * consumers scan) and expanded to doc pairs — q21's exact
     * readout shape over the merged state, exactly as q21 reads
     * `set_pairs_45`, and the oracle IS q21's SQL verbatim: merge ≡
     * recompute, hash-checked by the driver.
     */
   def q244SetPairsDeltaMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    expandWithMembers(stagedMergePairs(spark, dir),
-      stagedMergeTagged(spark, dir), "jaccard", lit(1.0))
+    expandWithMembers(UnigramMerge.pairs(spark, dir),
+      UnigramMerge.tagged(spark, dir), "jaccard", lit(1.0))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -444,50 +447,8 @@ object Similarity {
     * that bridge two of them.
     */
   def q245LabelsDeltaMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     stagedMergeLabels(spark, dir).orderBy("doc_id")
   }
-
-  /** The SHINGLE-cascade twins of the delta-merge demo families — the
-    * same even/odd ingest split maintained by the SAME merge machinery
-    * ([[collapseMergeTagged]] / [[pairsRemapFromTagged]] /
-    * [[newPairsFromTagged]]) with nothing changed but the token space
-    * (word 3-grams, [[shingleDocSets]]) and the threshold (q55's
-    * J ≥ 3/5): the merge entry points are generic over the token-set
-    * column and (p, q), and q246 carries that generality claim to the
-    * driver's oracle on a second cascade. Same manifest rationale as
-    * the unigram demo families (ingest fixture, not pipeline
-    * inventory).
-    */
-  private[graft] def stagedShingleMergeBaseGroups(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_shingle_base_groups")(
-      tokenSetGroupsBy(shingleDocSets(spark, dir)
-        .filter(pmod(col("doc_id"), lit(2L)) === 0)))
-
-  private[graft] def stagedShingleMergeBasePairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_shingle_base_pairs")(
-      setPairsOverStagedGroups(spark, dir, "merge_shingle_base_groups",
-        stagedShingleMergeBaseGroups(spark, dir), 3, 5))
-
-  private[graft] def stagedShingleMergeTagged(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_shingle_tagged")(
-      collapseMergeTagged(stagedShingleMergeBaseGroups(spark, dir),
-        shingleDocSets(spark, dir).filter(pmod(col("doc_id"), lit(2L)) === 1)))
-
-  private[graft] def stagedShingleMergeFreshPairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_shingle_fresh_pairs") {
-      val bytes = documentsSizeBytes(spark, dir)
-      newPairsFromTagged(stagedReadIn(pairJoinSession(spark, bytes), spark, dir,
-        "merge_shingle_tagged")(stagedShingleMergeTagged(spark, dir)), 3, 5, bytes)
-    }
-
-  private[graft] def stagedShingleMergePairs(spark: SparkSession, dir: String): DataFrame =
-    stagedTable(spark, dir, "merge_shingle_pairs") {
-      val tagged = stagedShingleMergeTagged(spark, dir)
-      pairsRemapFromTagged(tagged, stagedShingleMergeBasePairs(spark, dir),
-        documentsSizeBytes(spark, dir))
-        .unionByName(stagedShingleMergeFreshPairs(spark, dir))
-    }
 
   /** q246 — the set-pairs delta-merge on the SHINGLE cascade: q244's
     * exact pattern (staged base state, tagged collapse merge, re-keyed
@@ -498,9 +459,8 @@ object Similarity {
     * is family-generic, hash-checked by the driver on both cascades.
     */
   def q246ShinglePairsDeltaMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
-    expandWithMembers(stagedShingleMergePairs(spark, dir),
-      stagedShingleMergeTagged(spark, dir), "jaccard", lit(1.0))
+    expandWithMembers(ShingleMerge.pairs(spark, dir),
+      ShingleMerge.tagged(spark, dir), "jaccard", lit(1.0))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -624,7 +584,7 @@ object Similarity {
 
   private[ops] def prefixBucketStats(ranked: DataFrame, p: Int, q: Int): (Long, Long) = {
     val r = ranked
-      .withColumn("pre", slice(col("toks"), lit(1), expr(s"sz - (($p*sz + ${q - 1}) div $q) + 1")))
+      .withColumn("pre", ppjoinPrefix(p, q))
       .select(explode(col("pre")).as("tok_id"))
       .groupBy("tok_id").agg(count(lit(1)).as("n"))
       .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L)).as("v"),
@@ -653,14 +613,13 @@ object Similarity {
     */
   private[graft] def orderingProbeCandidates(spark: SparkSession): Long = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = (0 until 100).map { i =>
       val common = (0 until 30).map(k => s"common$k")
       val unique = (0 until 30).map(k => s"doc${i}u$k")
       (i.toLong, (common ++ unique).mkString(" "))
     }.toDF("doc_id", "text")
     val toks = docs.select(col("doc_id"),
-      call_function("shingle_hashes", split(col("text"), " "), lit(1)).as("toks"))
+      shingleHashes(split(col("text"), " "), 1).as("toks"))
     prefixJoinCandidates(tokenSetGroupsBy(toks), 4, 5).count()
   }
 
@@ -777,14 +736,11 @@ object Similarity {
   private[ops] def maskedSetPairs(groups: DataFrame, vocab: Seq[Long], p: Int, q: Int): DataFrame = {
     val inter = bit_count(col("a.mask").bitwiseAND(col("b.mask")))
     val pref = withSetMask(groups, vocab)
-      .withColumn("pre", slice(col("toks"), lit(1), expr(s"sz - (($p*sz + ${q - 1}) div $q) + 1")))
+      .withColumn("pre", ppjoinPrefix(p, q))
       .select(col("gid"), col("sz"), col("mask"), col("pre"),
         posexplode(col("pre")).as(Seq("pos", "tok_id")))
-    pref.as("a").join(pref.as("b"), expr(
-        "a.tok_id = b.tok_id AND a.gid < b.gid" +
-          s" AND b.sz BETWEEN ($p*a.sz + ${q - 1}) div $q AND ($q*a.sz) div $p" +
-          " AND prefix_intersect_count(a.pre, a.pos, b.pre, b.pos) = 0" +
-          s" AND $q * bit_count(a.mask & b.mask) >= $p * (a.sz + b.sz - bit_count(a.mask & b.mask))"))
+    pref.as("a").join(pref.as("b"), ppjoinCandidate(p, q, "a.gid < b.gid") &&
+        expr(s"$q * bit_count(a.mask & b.mask) >= $p * (a.sz + b.sz - bit_count(a.mask & b.mask))"))
       .select(col("a.gid").as("ga"), col("b.gid").as("gb"),
         roundD4(inter.cast(DoubleType) / (col("a.sz") + col("b.sz") - inter)).as("jaccard"))
   }
@@ -942,19 +898,40 @@ object Similarity {
     */
   private[ops] def prefixJoinCandidatesRanked(ranked: DataFrame, p: Int, q: Int): DataFrame = {
     val pref = ranked
-      .withColumn("pre", slice(col("toks"), lit(1), expr(s"sz - (($p*sz + ${q - 1}) div $q) + 1")))
+      .withColumn("pre", ppjoinPrefix(p, q))
       .select(col("gid"), col("sz"), col("pre"),
         posexplode(col("pre")).as(Seq("pos", "tok_id")))
-    pref.as("a").join(pref.as("b"), expr(
-        "a.tok_id = b.tok_id AND a.gid < b.gid" +
-          s" AND b.sz BETWEEN ($p*a.sz + ${q - 1}) div $q AND ($q*a.sz) div $p" +
-          // allocation-free form of sorted_intersect_count(slice(a.pre,
-          // 1, a.pos), slice(b.pre, 1, b.pos)) — runs once per matched
-          // pair inside the join's generated loop
-          " AND prefix_intersect_count(a.pre, a.pos, b.pre, b.pos) = 0" +
-          s" AND least(a.sz - a.pos, b.sz - b.pos) >= ($p*(a.sz + b.sz) + ${p + q - 1}) div ${p + q}"))
+    pref.as("a").join(pref.as("b"),
+      ppjoinCandidate(p, q, "a.gid < b.gid") && ppjoinPositionFilter(p, q))
       .select(col("a.gid").as("ga"), col("b.gid").as("gb"))
   }
+
+  /** The PPJoin prefix of a ranked (toks, sz) set at Jaccard threshold
+    * p/q: its first `sz - ceil(p·sz/q) + 1` tokens. Two sets with
+    * Jaccard ≥ p/q share at least one token of their prefixes.
+    */
+  private def ppjoinPrefix(p: Int, q: Int): Column =
+    slice(col("toks"), lit(1), expr(s"sz - (($p*sz + ${q - 1}) div $q) + 1"))
+
+  /** The join condition every prefix join shares, over two exploded
+    * prefix relations `a` and `b` of (gid, sz, pre, pos, tok_id): the
+    * same prefix token, the caller's `pairOrder` over the gids, the
+    * size bounds of Jaccard ≥ p/q, and first-shared-token emission —
+    * no earlier prefix token is shared, so each pair joins once.
+    * `prefixIntersectCount` is the allocation-free form of
+    * `sortedIntersectCount(slice(a.pre, 1, a.pos), slice(b.pre, 1, b.pos))`
+    * and runs once per matched pair inside the join's generated loop.
+    */
+  private def ppjoinCandidate(p: Int, q: Int, pairOrder: String): Column =
+    expr(s"a.tok_id = b.tok_id AND $pairOrder" +
+      s" AND b.sz BETWEEN ($p*a.sz + ${q - 1}) div $q AND ($q*a.sz) div $p") &&
+      prefixIntersectCount(col("a.pre"), col("a.pos"), col("b.pre"), col("b.pos")) === 0
+
+  /** PPJoin's position filter: the overlap the unseen suffixes can still
+    * add must reach the Jaccard ≥ p/q overlap bound.
+    */
+  private def ppjoinPositionFilter(p: Int, q: Int): Column =
+    expr(s"least(a.sz - a.pos, b.sz - b.pos) >= ($p*(a.sz + b.sz) + ${p + q - 1}) div ${p + q}")
 
   /** Broadcast-threshold for the doc-side lookup of the verify join:
     * below this many bytes of source documents the token-set dimension
@@ -1045,9 +1022,8 @@ object Similarity {
     */
   private[ops] def verifySetJaccardWithMembersGeneral(cands: DataFrame, groups: DataFrame,
       threshold: Double, docBytes: BigInt): DataFrame = {
-    graft.functions.GraftFunctions.register(cands.sparkSession)
     verifyJoin(cands, groups.select(col("gid"), col("toks"), col("sz"), col("members")),
-      call_function("sorted_intersect_count", col("g1.toks"), col("g2.toks")),
+      sortedIntersectCount(col("g1.toks"), col("g2.toks")),
       threshold, docBytes)
   }
 
@@ -1142,7 +1118,6 @@ object Similarity {
     * that density is the corpus's true geometry, not a plan defect.
     */
   def q21JaccardNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the collapse AND the verified set pairs are cross-query staged
     // relations ([[stagedUnigramGroups]]/[[stagedSetPairs45]]): the
     // candidate+verify join below ran once, at staging-build time, with
@@ -1215,7 +1190,6 @@ object Similarity {
     * final exchange.
     */
   def q132ModalityAgreement(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val pairs = expandWithMembers(stagedSetPairs45(spark, dir),
       stagedUnigramGroups(spark, dir), "jaccard", lit(1.0))
     val e = Tables.embeddings(spark, dir)
@@ -1248,7 +1222,6 @@ object Similarity {
     * rarest-first prefix order always has pruning signal here.
     */
   def q55ShingleNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docBytes = documentsSizeBytes(spark, dir)
     // native codegen'd build ([[graft.functions.ShingleHashes]]) — the
     // HOF formulation is interpreted per window and was the bottleneck
@@ -1272,7 +1245,6 @@ object Similarity {
     * pruning) is `Sketches.q32IvfAnn`.
     */
   def q22TopkCosine(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val queries = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -1306,9 +1278,8 @@ object Similarity {
     * space) — [[docTokenSets]]'s n=3 twin.
     */
   private[graft] def shingleDocSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir).select(col("doc_id"),
-      call_function("shingle_hashes", split(col("text"), " "), lit(3)).as("toks"))
+      shingleHashes(split(col("text"), " "), 3).as("toks"))
   }
 
   /** The staged [[dfRankedSets]] remap of [[stagedShingleGroups]] —
@@ -1352,7 +1323,6 @@ object Similarity {
     * containment ≡ 1.0).
     */
   def q126ContainmentNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val groups = stagedShingleGroups(spark, dir)
     val pre = groups.select(col("gid").as("ga"), col("sz").as("sza"),
       explode(expr("slice(toks, 1, cast(sz - (9*sz + 9) div 10 + 1 as int))")).as("tok"))
@@ -1367,7 +1337,7 @@ object Similarity {
     val withB = groups.select(col("gid").as("gb"), col("toks").as("tb"),
       col("members").as("mb"))
     val verified = cand.join(withA, "ga").join(withB, "gb")
-      .withColumn("ov", call_function("sorted_intersect_count", col("ta"), col("tb")))
+      .withColumn("ov", sortedIntersectCount(col("ta"), col("tb")))
       .filter(col("ov") * 10 >= col("sza") * 9)
       .withColumn("containment", roundD4(col("ov").cast(DoubleType) / col("sza")))
     expandWithMembers(verified, groups, "containment", lit(1.0))
@@ -1516,7 +1486,6 @@ object Similarity {
     */
   private[graft] def stagedPagerankScores(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "pagerank_scores") {
-      graft.functions.GraftFunctions.register(spark)
       // fixpoint partition policy (coarse) — no-op clone locally
       val s2 = fixpointSession(spark)
       val edges = stagedReadIn(s2, spark, dir, "set_pairs_45")(
@@ -1559,7 +1528,6 @@ object Similarity {
     * the readout is matrix-sized, the shuffles are long-keyed.
     */
   def q157CrossSourceDups(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // GROUP-LEVEL counting (guide §2.3 "aggregate before you shuffle"):
     // the answer is per-(source, source) COUNTS, so the doc-pair
     // expansion the previous shape materialized (every within-group
@@ -1632,7 +1600,6 @@ object Similarity {
   private[graft] val CurveThresholds = Seq(0.8, 0.85, 0.9, 0.95, 1.0)
 
   def q160ThresholdCurve(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // GROUP-LEVEL curve (q157's rewrite, guide §2.3): the previous
     // shape exploded every doc pair × 5 thresholds and ran a
@@ -1733,7 +1700,6 @@ object Similarity {
     * walks.
     */
   def q177TriangleCensus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = stagedSetPairs45(spark, dir).select("ga", "gb")
     val deg = e.select(explode(array(col("ga"), col("gb"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -1758,7 +1724,7 @@ object Similarity {
       .join(side(adj.select(col("src"), col("nbrs").as("nu"))), Seq("src"))
       // a sink vertex (no out-edges) has no adjacency row → empty set
       .join(side(adj.select(col("src").as("dst"), col("nbrs").as("nv"))), Seq("dst"), "left_outer")
-      .select(expr("CAST(sorted_intersect_count(nu, coalesce(nv, array())) AS BIGINT)").as("t"))
+      .select(sortedIntersectCount(col("nu"), coalesce(col("nv"), array())).cast(LongType).as("t"))
       .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
     deg.agg(count(lit(1)).as("n_vertices"),
         coalesce(sum(expr("(deg * (deg - 1)) div 2")), lit(0L)).cast(LongType).as("n_wedges"))
@@ -1807,7 +1773,6 @@ object Similarity {
     * shared nb/x CTE pair.
     */
   private def edgeCommonNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = stagedSetPairs45(spark, dir).select("ga", "gb")
     val adj = e.select(col("ga").as("v"), col("gb").as("n"))
       .union(e.select(col("gb").as("v"), col("ga").as("n")))
@@ -1829,7 +1794,7 @@ object Similarity {
     e.join(side(adj.select(col("v").as("ga"), col("nbrs").as("na"), col("deg").as("deg_a"))), "ga")
       .join(side(adj.select(col("v").as("gb"), col("nbrs").as("nb"), col("deg").as("deg_b"))), "gb")
       .select(col("ga"), col("gb"),
-        expr("CAST(sorted_intersect_count(na, nb) AS BIGINT)").as("cn"),
+        sortedIntersectCount(col("na"), col("nb")).cast(LongType).as("cn"),
         col("deg_a"), col("deg_b"))
   }
 
@@ -2008,7 +1973,6 @@ object Similarity {
     }
 
   def q31EmbedNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     embedNeardupFrom(Tables.embeddings(spark, dir))
   }
 
@@ -2059,7 +2023,6 @@ object Similarity {
   private[graft] val KnnK = 5
 
   def q115KnnLabel(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     knnLabelFrom(Tables.embeddings(spark, dir))
   }
 
@@ -2069,7 +2032,6 @@ object Similarity {
     * there is the 1/n_labels floor; the oracle still pins the votes).
     */
   private[graft] def knnLabelFrom(e: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     val seedBytes = statSizeBytes(e)
     val q = e.select(col("vec_id").as("qid"), col("label").as("qlbl"), col("embedding").as("qe"))
       .withColumn("qn", norm(col("qe")))
@@ -2094,7 +2056,7 @@ object Similarity {
       .select(col("qid"), col("qlbl"),
         struct((-sim).as("ns"), col("tid"), col("tlbl")).as("s"))
       .groupBy("qid", "qlbl")
-      .agg(call_function("top_k_struct", col("s"), lit(KnnK)).as("top"))
+      .agg(topKStruct(col("s"), KnnK).as("top"))
       .select(col("qid"), col("qlbl"), explode(col("top")).as("t"))
       .groupBy(col("qid"), col("qlbl"), col("t.tlbl").as("tlbl"))
       .agg(count(lit(1)).as("votes"))
@@ -2128,7 +2090,6 @@ object Similarity {
   private[graft] val KnnIvfProbes = 2
 
   def q120KnnLabelIvf(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     knnLabelIvf(Tables.embeddings(spark, dir), stagedIvfModel(spark, dir))
   }
 
@@ -2136,7 +2097,6 @@ object Similarity {
     * candidates instead of all pairs.
     */
   private[graft] def knnLabelIvf(e: DataFrame, trained: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     val q = assignToCentroids(trained,
       e.select(col("vec_id").as("qid"), col("label").as("qlbl"), col("embedding").as("qe")),
       "qid", "qe", probes = KnnIvfProbes)
@@ -2156,7 +2116,7 @@ object Similarity {
       .select(col("qid"), col("qlbl"),
         struct((-sim).as("ns"), col("tid"), col("tlbl")).as("s"))
       .groupBy("qid", "qlbl")
-      .agg(call_function("top_k_struct", col("s"), lit(KnnK)).as("top"))
+      .agg(topKStruct(col("s"), KnnK).as("top"))
       .select(col("qid"), col("qlbl"), explode(col("top")).as("t"))
       .groupBy(col("qid"), col("qlbl"), col("t.tlbl").as("tlbl"))
       .agg(count(lit(1)).as("votes"))
@@ -2179,7 +2139,6 @@ object Similarity {
     * the accuracy/cost trade being demonstrated (and oracle-checked).
     */
   def q32IvfAnn(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -2222,7 +2181,6 @@ object Similarity {
     * pipeline materializes, not the pair list.
     */
   def q56NeardupSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // groups and verified pairs come from the cross-query staging
     // registry — the drop-set derivation is a reclassification of the
     // staged pairs, not a second cascade
@@ -2294,10 +2252,9 @@ object Similarity {
     * far below any contamination decision threshold.
     */
   def q59CrossSourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val h = Tables.documents(spark, dir)
       .select(col("source"),
-        xxhash64(call_function("shingle_hashes", split(col("text"), " "), lit(1))).as("th"))
+        xxhash64(shingleHashes(split(col("text"), " "), 1)).as("th"))
       .distinct()
     h.as("a").join(h.as("b"),
         col("a.th") === col("b.th") && col("a.source") =!= col("b.source"))
@@ -2409,7 +2366,6 @@ object Similarity {
     */
   def trainIvfModel(spark: SparkSession, dir: String, k: Int = 8, iters: Int = 3): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     var model: Seq[(Int, Seq[Float])] = corpus
       .withColumn("h", xxhash64(col("vec_id")))
@@ -2436,7 +2392,6 @@ object Similarity {
     * model relation — in-memory or read back from a model table.
     */
   def ivfSearch(spark: SparkSession, dir: String, trained: DataFrame, nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     // each query row fans out to its `nprobe` nearest clusters; targets
     // keep exactly one cluster, so a (qid, tid) pair can join at most
@@ -2468,7 +2423,6 @@ object Similarity {
     * distortion.
     */
   def q131IvfSq8(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val model = int8Model(e)
     val trained = stagedIvfModel(spark, dir)
@@ -2544,7 +2498,6 @@ object Similarity {
     */
   def componentLabels(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "component_labels") {
-      graft.functions.GraftFunctions.register(spark)
       // fixpoint partition policy (coarse) — no-op clone locally
       val s2 = fixpointSession(spark)
       val groups = stagedReadIn(s2, spark, dir, "unigram_groups")(
@@ -2732,7 +2685,6 @@ object Similarity {
     * on pathological diameters. See the scaladocs above for the trade.
     */
   def q62bDedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // shares the staged collapse AND edge build with q62 (the round-5
     // verdict's "share setPairsAbove" item); only the star label loop —
     // the algorithm under comparison — runs here
@@ -2852,7 +2804,6 @@ object Similarity {
     * Nothing ever expands to doc×doc pairs.
     */
   def q100IncrementalNeardup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val indexSources = (0 to 9).map(i => s"src$i")
     val groups = stagedUnigramGroups(spark, dir)
     val members = groups.select(col("gid"), explode(col("members")).as("doc_id"))
@@ -2898,7 +2849,6 @@ object Similarity {
     */
   def q94SemDedup(spark: SparkSession, dir: String): DataFrame = {
     val tau = 0.35
-    graft.functions.GraftFunctions.register(spark)
     // q94's clustering model is the DEFAULT k=8 trainIvfModel (its
     // published output is a function of exactly that model, so it must
     // not follow ivf_model's √n-sized nlist) — but retraining it per
@@ -2945,7 +2895,6 @@ object Similarity {
   private[graft] val HardNegQueries = 10
 
   def q141HardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val q = e.filter(col("vec_id") < HardNegQueries)
       .select(col("vec_id").as("qid"), col("label").as("q_label"), col("embedding").as("qe"))
@@ -2974,7 +2923,7 @@ object Similarity {
       .select(col("qid"), col("q_label"),
         struct((-sim).as("ns"), col("tid"), col("neg_label")).as("s"))
       .groupBy("qid", "q_label")
-      .agg(call_function("top_k_struct", col("s"), lit(HardNegK)).as("top"))
+      .agg(topKStruct(col("s"), HardNegK).as("top"))
       .select(col("qid"), col("q_label"), posexplode(col("top")).as(Seq("i", "t")))
       .select(col("qid"), col("q_label"), (col("i") + 1L).cast(LongType).as("rk"),
         col("t.tid").as("tid"), col("t.neg_label").as("neg_label"),
@@ -3076,7 +3025,6 @@ object Similarity {
     * pair, double-counted cross pair) shifts a histogram bucket.
     */
   def q219DedupDegreeHist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     expandWithMembers(stagedSetPairs45(spark, dir),
         stagedUnigramGroups(spark, dir), "jaccard", lit(1.0))
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -3265,7 +3213,6 @@ object Similarity {
     * vector-sized shuffles.
     */
   def q159SourceDispersion(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ssq = (floor(foldSum(transform(col("embedding"),
         x => x.cast(DoubleType) * x.cast(DoubleType))) * lit(1000000.0)) / lit(1000000.0))
       .cast(DecimalType(28, 6))
@@ -3302,7 +3249,6 @@ object Similarity {
     * monotone function of norm4.
     */
   def q145NormOutliers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val w = Window.partitionBy("label").orderBy(asc("norm4"))
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), roundD4(norm(col("embedding"))).as("norm4"))
@@ -3317,7 +3263,6 @@ object Similarity {
     * shuffle at all; scales linearly.
     */
   def q24MultimodalCols(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"),
         size(col("embedding")).cast(LongType).as("dim"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions.{minhashSignature, simhash64}
 import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,7 +63,7 @@ object Sketches {
     */
   private[graft] def withBandHashes(df: DataFrame, toksCol: String, keep: Seq[String]): DataFrame = {
     val rowsPerBand = NumPerm / Bands
-    df.withColumn("sig", call_function("minhash_signature", col(toksCol)))
+    df.withColumn("sig", minhashSignature(col(toksCol)))
       .select(keep.map(col) ++ (0 until Bands).map { j =>
         xxhash64((0 until rowsPerBand).map(k =>
           element_at(col("sig"), j * rowsPerBand + k + 1)): _*).as(s"h$j")
@@ -123,7 +124,6 @@ object Sketches {
     */
   def q25MinhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     val threshold = 0.8
-    graft.functions.GraftFunctions.register(spark)
     val docBytes = Similarity.documentsSizeBytes(spark, dir)
     // exact-dup collapse first (same cascade as q21): signatures,
     // banding and verification all run over DISTINCT token sets;
@@ -258,7 +258,6 @@ object Sketches {
     */
   private[graft] def stagedSketchLabels(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "sketch_labels") {
-      graft.functions.GraftFunctions.register(spark)
       val groups = Similarity.stagedUnigramGroups(spark, dir)
       val cands =
         if (Similarity.zipfLikeDf(groups)) Similarity.prefixJoinCandidates(groups, 4, 5)
@@ -279,7 +278,6 @@ object Sketches {
   def q26SimhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     val maxHamming = 3
     val chunks = 4
-    graft.functions.GraftFunctions.register(spark)
     val docBytes = Similarity.documentsSizeBytes(spark, dir)
     // same cascade as q21/q25: the simhash is a pure function of the
     // token set, so signatures/joins run over DISTINCT sets (exact dups
@@ -291,7 +289,7 @@ object Sketches {
     // bit j of the simhash = sign of Σ_tokens (±1 by bit j of the token
     // hash) — one fused codegen loop (graft.functions.SimHash64)
     val sigs = groups.select(col("gid"),
-      call_function("simhash64", col("toks")).as("simhash"))
+      simhash64(col("toks")).as("simhash"))
     // same first-collision emission as q25 ([[firstCollisionPairs]]):
     // candidate pairs share at least one 16-bit chunk and are emitted
     // once, from the lowest matching chunk, all predicates codegen'd

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.mortonInterleave
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -331,7 +332,6 @@ object Storage {
     * grid multiply stays under 2^63 for any key range below 2^47.
     */
   def q175ZorderPlan(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val o = Tables.orders(spark, dir).select(
       col("o_custkey").cast(LongType).as("x"),
       expr(graft.ops.Det.floorDivExpr("unix_micros(o_orderdate)", 86400000000L)).as("y"))
@@ -342,7 +342,7 @@ object Storage {
     o.crossJoin(broadcast(bounds))
       .withColumn("gx", grid("x", "xmn", "xmx"))
       .withColumn("gy", grid("y", "ymn", "ymx"))
-      .withColumn("z", expr("morton_interleave(gx, gy)"))
+      .withColumn("z", mortonInterleave(col("gx"), col("gy")))
       .withColumn("bin_id", expr("z div 268435456")) // top 4 Z-bits: 16 bins
       .groupBy("bin_id")
       .agg(count(lit(1)).as("n_rows"),

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{gramHashes, shingleHashes, wordNgrams}
 import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -164,7 +165,6 @@ object TextOps {
     * (over the scrubbed+deduped survivors).
     */
   private[ops] def repeatedSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     repeatedSpansIn(Tables.documents(spark, dir))
   }
 
@@ -173,7 +173,7 @@ object TextOps {
     val L = SpanL
     val grams = docs
       .select(col("doc_id"),
-        posexplode(call_function("gram_hashes", split(col("text"), " "), lit(L)))
+        posexplode(gramHashes(split(col("text"), " "), L))
           .as(Seq("pos", "gram")))
     val repeated = grams
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
@@ -224,10 +224,9 @@ object TextOps {
   private[ops] val EvalSources = Seq("src15", "src16", "src17", "src18", "src19")
 
   def q117EvalSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        posexplode(call_function("gram_hashes", split(col("text"), " "), lit(SpanL)))
+        posexplode(gramHashes(split(col("text"), " "), SpanL))
           .as(Seq("pos", "gram")))
     val isEval = col("source").isin(EvalSources: _*)
     val evalGrams = grams.filter(isEval).select("gram").distinct()
@@ -468,7 +467,6 @@ object TextOps {
     * Ordering (tf desc, df desc, hash asc) is total and engine-agnostic.
     */
   def q124BoilerplateNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val n = 5
     val k = 50
     // native codegen'd gram build ([[graft.functions.WordNgrams]]) —
@@ -477,7 +475,7 @@ object TextOps {
     // 11.8 s total at sf0.1; same lesson as q55's shingle_hashes)
     def grams: DataFrame = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(call_function("word_ngrams", split(col("text"), " "), lit(n))).as("g"))
+        explode(wordNgrams(split(col("text"), " "), n)).as("g"))
       .select(col("doc_id"), md5(col("g")).as("h"), col("g"))
     // `top` feeds BOTH the winner-hash filter and the final join —
     // without sharing it the whole gram scan+agg subtree runs once per
@@ -567,10 +565,9 @@ object TextOps {
     * invariant under the injective-w.h.p. hash.
     */
   def q140NgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"),
-        explode(call_function("shingle_hashes", split(col("text"), " "), lit(5))).as("h"))
+        explode(shingleHashes(split(col("text"), " "), 5)).as("h"))
     val firstSeen = grams.groupBy("h").agg(min(col("doc_id")).as("first_doc"))
     grams.join(firstSeen, "h")
       .groupBy("doc_id")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.GraftFunctions.{shingleHashes, shingleStats}
 import graft.stage.Staging.stagedTable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -722,14 +723,13 @@ object TrainingData {
     * corpus).
     */
   def q79RepetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val toks = split(col("text"), " ")
     def frac(num: org.apache.spark.sql.Column, den: org.apache.spark.sql.Column) =
       roundD4(when(den > 0L, num.cast("double") / den).otherwise(lit(0.0)))
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        call_function("shingle_stats", toks, lit(2)).as("s2"),
-        call_function("shingle_stats", toks, lit(3)).as("s3"))
+        shingleStats(toks, 2).as("s2"),
+        shingleStats(toks, 3).as("s3"))
       .select(col("doc_id"),
         col("s2.n_grams").as("n_2grams"),
         frac(col("s2.n_grams") - col("s2.n_distinct"), col("s2.n_grams")).as("dup_2gram_frac"),
@@ -886,8 +886,7 @@ object TrainingData {
     */
   private[graft] def bpeTokenCount(text: org.apache.spark.sql.Column,
       merges: Seq[(String, String)]): org.apache.spark.sql.Column =
-    call_function("bpe_token_count", text,
-      lit(merges.map(_._1).toArray), lit(merges.map(_._2).toArray))
+    graft.functions.GraftFunctions.bpeTokenCount(text, merges.map(_._1), merges.map(_._2))
 
   /** The builtin-only replay (spell → fold literal replaces → count),
     * kept as the kernel's reference semantics for BpeTokenSpec's
@@ -912,7 +911,6 @@ object TrainingData {
     * output sort.
     */
   def q105BpeTokens(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val ws = size(split(col("text"), " ")).cast(LongType)
     Tables.documents(spark, dir)
       .select(col("doc_id"), ws.as("ws_tokens"),
@@ -932,7 +930,6 @@ object TrainingData {
     * data run schedules.
     */
   def q106BpeSequencePack(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     packByTokens(Tables.documents(spark, dir)
       .select(col("doc_id"),
         bpeTokenCount(col("text"), trainedBpeMerges(spark, dir)).as("n_tokens")))
@@ -959,7 +956,6 @@ object TrainingData {
     */
   private[graft] def stagedCleanPack(spark: SparkSession, dir: String): DataFrame =
     stagedTable(spark, dir, "clean_pack") {
-      graft.functions.GraftFunctions.register(spark)
       packByTokens(TextOps.q107SpanDedup(spark, dir)
         .filter(col("n_kept") > 0)
         .select(col("doc_id"),
@@ -1206,11 +1202,10 @@ object TrainingData {
     * string grams under the usual injective-relabeling argument.
     */
   def q82Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val n = 4
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        explode(call_function("shingle_hashes", split(col("text"), " "), lit(n))).as("h"))
+        explode(shingleHashes(split(col("text"), " "), n)).as("h"))
     val evalGrams = grams.filter(col("source") === "src19")
       .select(col("h"), col("doc_id").as("eval_doc_id"))
     grams.filter(col("source") =!= "src19")
@@ -1313,11 +1308,10 @@ object TrainingData {
     * fan-out), finished with one ≤|sources|-row aggregation.
     */
   def q130ContaminationReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val n = 4
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
-        explode(call_function("shingle_hashes", split(col("text"), " "), lit(n))).as("h"))
+        explode(shingleHashes(split(col("text"), " "), n)).as("h"))
     val evalG = grams.filter(col("source") === "src19").select("h").distinct()
     val perDoc = grams.filter(col("source") =!= "src19")
       .join(evalG, "h")
@@ -1521,7 +1515,6 @@ object TrainingData {
     * how a budget is actually spent.
     */
   def q144FertilityReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("source"), col("lang"),
         size(split(col("text"), " ")).cast(LongType).as("ws"),

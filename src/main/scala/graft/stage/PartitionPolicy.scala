@@ -66,7 +66,6 @@ private[graft] object PartitionPolicy {
     else {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      graft.functions.GraftFunctions.register(s2)
       s2
     }
 }

@@ -178,13 +178,28 @@ class LogSourceSpec extends SparkSpecBase {
       s"the third line of the same-size rewrite must be read, got ${rows.toSeq.sorted}")
   }
 
+  private def userRide(t: String, uid: Long): Seq[String] = Seq(
+    msg(s"$t:00.000", "[INFO]: --------- beginning of a new ride"),
+    msg(s"$t:01.000", s"[INFO]: data = {'user_id': $uid, 'name': 'Sam Rider', " +
+      "'gender': 'male', 'address': '1 Way,London,AB1 2CD', 'date_of_birth': 0, " +
+      "'height_cm': 180, 'weight_kg': 80, 'account_create_date': 0, " +
+      "'original_source': 'offline'}"),
+    msg(s"$t:02.000", "[INFO]: Ride - duration = 1.0; resistance = 30"),
+    msg(s"$t:03.000", "[INFO]: Telemetry - hrt = 84; rpm = 27; power = 5.25"))
+
   test("the ETL runs unchanged on the DSv2 source") {
-    val dir = fixture()
-    val parsed = DelotonPipeline.parsed(DelotonPipeline.readLogs(spark, dir))
-    val rows = parsed.select("stream", "ride_id", "is_marker", "is_ride", "is_telemetry")
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    // each stream's marker starts its own ride 1 — state never crosses files
-    assert(rows.count(_ == ("bike-1", 1L)) == 3)
-    assert(rows.count(_ == ("bike-2", 1L)) == 2)
+    val dir = tmpDir()
+    writeLogs(dir, "bike-1", userRide("2024-01-01 12:00", 11L) ++
+      userRide("2024-01-01 12:10", 12L) ++ userRide("2024-01-01 12:20", 13L))
+    writeLogs(dir, "bike-2", userRide("2024-01-02 09:00", 21L) ++
+      userRide("2024-01-02 09:10", 22L) ++ userRide("2024-01-02 09:20", 23L))
+    val raw = DelotonPipeline.readLogs(spark, dir)
+    // each stream numbers its rides from its own first marker — state
+    // never crosses files — and the trim keeps each stream's middle ride
+    val rides = DelotonPipeline.rides(raw).orderBy("stream")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(8))).toSeq
+    assert(rides == Seq(("bike-1", 2L, 12L), ("bike-2", 2L, 22L)))
+    val users = DelotonPipeline.users(raw).collect().map(_.getLong(0)).sorted.toSeq
+    assert(users == Seq(11L, 12L, 13L, 21L, 22L, 23L))
   }
 }
