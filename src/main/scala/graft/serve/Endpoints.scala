@@ -1,8 +1,13 @@
 package graft.serve
 
-import org.apache.spark.sql.DataFrame
+import java.lang.ref.WeakReference
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** The reference's Flask query surface (reference api.py:57-188) as pure
   * DataFrame functions — the HTTP layer is out of scope, but every
@@ -18,9 +23,13 @@ import org.apache.spark.sql.functions._
   * **Served tables.** Each read endpoint passes its table inputs through
   * [[served]]. A small table is collected once and held as a
   * `LocalRelation`; Catalyst's `ConvertToLocalRelation` then evaluates a
-  * request's filter, projection and `to_json` during optimization, so a
-  * filter request runs no Spark job (a join or an aggregate over held
-  * rows still runs one). Small means all three of:
+  * request's filter, projection and `to_json` during optimization, so
+  * after a handle's first request no read endpoint runs a Spark job over
+  * held tables. The two shapes that are not a filter are answered from
+  * held rows as well: [[ridesByGender]] filters `users ⋈ rides`, joined
+  * once on the driver per pair of held handles, and [[dailyRides]] with
+  * no date finds the latest day in a folded projection and filters by
+  * that literal. Small means all three of:
   *   - its optimized plan is one path-based file scan: a
   *     `LogicalRelation` over a `HadoopFsRelation` on an
   *     `InMemoryFileIndex`, with no catalog table;
@@ -67,13 +76,13 @@ object Endpoints {
   private val held =
     java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Option[DataFrame]])
 
-  /** `df`, or its rows held in local memory when it is a small file scan
-    * with a fixed listing (see the object doc). `Dataset` keeps
-    * `Object`'s identity equality, and the held copy does not refer to
-    * `df`, so the weak key frees with the caller's handle.
+  /** The rows of `df` held in local memory when it is a small file scan
+    * with a fixed listing (see the object doc), else `None`. `Dataset`
+    * keeps `Object`'s identity equality, and the held copy does not refer
+    * to `df`, so the weak key frees with the caller's handle.
     */
-  private def served(df: DataFrame): DataFrame =
-    if (df.isStreaming) df // a streaming plan cannot be optimized as a batch one
+  private def heldRows(df: DataFrame): Option[DataFrame] =
+    if (df.isStreaming) None // a streaming plan cannot be optimized as a batch one
     else Option(held.get(df)).getOrElse {
       val qe = df.queryExecution
       val smallFileScan = qe.optimizedPlan match {
@@ -90,7 +99,65 @@ object Endpoints {
           else Some(qe.sparkSession.createDataFrame(rows, df.schema))
         Option(held.putIfAbsent(df, local)).getOrElse(local)
       }
-    }.getOrElse(df)
+    }
+
+  private def served(df: DataFrame): DataFrame = heldRows(df).getOrElse(df)
+
+  /** Per rides handle: the users handle its join was built with, and
+    * `users ⋈ rides` held as a `LocalRelation`, or `None` where
+    * [[ridesByGender]] keeps the join. Neither value refers to the rides
+    * handle, so the entry frees with it.
+    */
+  private val heldJoins = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[DataFrame, (WeakReference[DataFrame], Option[DataFrame])])
+
+  /** Key types whose boxed `equals` on the driver is exactly Spark's join
+    * equality.
+    */
+  private val driverKeyTypes = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
+  /** `users.select(user_id, gender, age) ⋈ rides` on `user_id`, joined on
+    * the driver from the held rows of both handles, in the join's column
+    * order: the key, `gender`, `age`, then the rides columns without the
+    * key. A null key matches nothing, as in the join. `None` (keep the
+    * join) when either table is not held, when the two key types differ
+    * or are not integral, when the rides share a column name with the
+    * users' three, or when a `user_id` repeats among the users, where the
+    * join would multiply rows. Built once per pair of handles;
+    * collecting held rows and the folded projection runs no job.
+    */
+  private def heldJoin(users: DataFrame, rides: DataFrame): Option[DataFrame] = {
+    val cached = heldJoins.get(rides)
+    if (cached != null && (cached._1.get eq users)) cached._2
+    else {
+      val joined = for {
+        u <- heldRows(users)
+        r <- heldRows(rides)
+        riders = u.select("user_id", "gender", "age")
+        keyType = riders.schema.head.dataType
+        k = r.schema.fieldNames.indexOf("user_id")
+        rideFields = r.schema.patch(k, Nil, 1)
+        if k >= 0 && r.schema(k).dataType == keyType && driverKeyTypes(keyType) &&
+          // a rides column named like a users one would make the gender filter ambiguous
+          !rideFields.exists(f => riders.columns.exists(_.equalsIgnoreCase(f.name)))
+        byKey <- uniqueKeys(riders.collect())
+      } yield {
+        val rows = r.collectAsList().asScala.flatMap { ride =>
+          Option(byKey.get(ride.get(k))).map(rider => Row.fromSeq(rider.toSeq ++ ride.toSeq.patch(k, Nil, 1)))
+        }
+        u.sparkSession.createDataFrame(rows.asJava, StructType(riders.schema ++ rideFields))
+      }
+      heldJoins.put(rides, (new WeakReference(users), joined))
+      joined
+    }
+  }
+
+  /** The rows by their non-null first field, or `None` if one repeats. */
+  private def uniqueKeys(rows: Array[Row]): Option[java.util.HashMap[Any, Row]] = {
+    val byKey = new java.util.HashMap[Any, Row]
+    val unique = rows.forall(row => row.isNullAt(0) || byKey.put(row.get(0), row) == null)
+    if (unique) Some(byKey) else None
+  }
 
   /** GET /ride/<id> (api.py:62-67). */
   def rideById(rides: DataFrame, rideId: Long): DataFrame =
@@ -116,11 +183,17 @@ object Endpoints {
       case _ => served(users)
     }
 
-  /** GET /rides/<gender> (api.py:97-107): users⋈rides + gender filter. */
+  /** GET /rides/<gender> (api.py:97-107): users⋈rides + gender filter.
+    * Over two held tables the filter runs on their held join.
+    */
   def ridesByGender(users: DataFrame, rides: DataFrame, gender: String): DataFrame =
-    served(users).filter(col("gender") === gender)
-      .select("user_id", "gender", "age")
-      .join(served(rides), "user_id")
+    heldJoin(users, rides) match {
+      case Some(joined) => joined.filter(col("gender") === gender)
+      case None =>
+        served(users).filter(col("gender") === gender)
+          .select("user_id", "gender", "age")
+          .join(served(rides), "user_id")
+    }
 
   /** GET /rider/<id>/rides (api.py:140-145). */
   def ridesForRider(rides: DataFrame, userId: Long): DataFrame =
@@ -131,13 +204,20 @@ object Endpoints {
     * most recent day in the data (anchored, not wall-clock "today").
     */
   def dailyRides(rides: DataFrame, date: Option[(Int, Option[Int], Option[Int])]): DataFrame = {
-    val table = served(rides)
+    val local = heldRows(rides)
+    val table = local.getOrElse(rides)
     date match {
       case Some((y, m, d)) =>
         table.filter(
           year(col("start_time")) === y &&
             m.map(month(col("start_time")) === _).getOrElse(lit(true)) &&
             d.map(dayofmonth(col("start_time")) === _).getOrElse(lit(true)))
+      case None if local.isDefined =>
+        // the latest day is the max over a folded projection of the held
+        // rows; no day (no rows, or only null dates) answers nothing
+        val day = unix_date(to_date(col("start_time")))
+        val days = table.select(day).collect().filterNot(_.isNullAt(0)).map(_.getInt(0))
+        if (days.isEmpty) table.limit(0) else table.filter(day === days.max)
       case None =>
         val latest = table.agg(max(to_date(col("start_time"))).as("latest_day"))
         table.crossJoin(broadcast(latest))

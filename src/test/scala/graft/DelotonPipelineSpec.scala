@@ -202,22 +202,24 @@ class DelotonPipelineSpec extends SparkSpecBase {
   private def localRelations(d: DataFrame): Seq[LocalRelation] =
     d.queryExecution.analyzed.collect { case l: LocalRelation => l }
 
+  /** Each endpoint shape's sorted JSON records over fresh reads of the two paths. */
+  private def answers(usersPath: String, ridesPath: String): Seq[(String, Seq[String])] = {
+    val (users, rides) = (spark.read.parquet(usersPath), spark.read.parquet(ridesPath))
+    endpointShapes(users, rides).map { case (n, d) => n -> Endpoints.toJsonRecords(d).sorted }
+  }
+
   test("served tables answer every endpoint byte-identically to the parquet scan; an old handle keeps its snapshot") {
     val dir = tmpDir()
     val (usersPath, ridesPath) = (s"$dir/users", s"$dir/rides")
     DelotonPipeline.users(raw).write.parquet(usersPath)
     DelotonPipeline.rides(raw).coalesce(1).write.parquet(ridesPath)
-    def answers(): Seq[(String, Seq[String])] = {
-      val (users, rides) = (spark.read.parquet(usersPath), spark.read.parquet(ridesPath))
-      endpointShapes(users, rides).map { case (n, d) => n -> Endpoints.toJsonRecords(d).sorted }
-    }
     def assertServedExactly(files: Int): Unit = {
       assert(new java.io.File(ridesPath).list().count(_.endsWith(".parquet")) == files)
-      val served = answers()
+      val served = answers(usersPath, ridesPath)
       val scanned = withParquetScan {
         assert(localRelations(Endpoints.rideById(spark.read.parquet(ridesPath), 3L)).isEmpty,
           "a V2 parquet read must keep the parquet scan")
-        answers()
+        answers(usersPath, ridesPath)
       }
       assert(localRelations(Endpoints.rideById(spark.read.parquet(ridesPath), 3L)).nonEmpty,
         "a small parquet table must be served from local memory")
@@ -246,6 +248,41 @@ class DelotonPipelineSpec extends SparkSpecBase {
     val overwritten = spark.read.parquet(ridesPath)
     assert(Endpoints.toJsonRecords(Endpoints.rideById(overwritten, 103L)).isEmpty)
     assert(Endpoints.toJsonRecords(Endpoints.rideById(overwritten, 203L)).length == 1)
+
+    // edge tables: the held join and the held latest day answer as the scan
+    // does, and a repeated user_id keeps the join, which repeats its rides
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.functions.{lit, when}
+    val users = DelotonPipeline.users(raw)
+    val rides = DelotonPipeline.rides(raw)
+    Seq(
+      "a repeated user_id" -> (users.union(users.filter(col("user_id") === 816L)), rides),
+      "a ride with no user_id" ->
+        (users, rides.union(rides.limit(1).withColumn("ride_id", lit(9L)).withColumn("user_id", lit(null).cast("long")))),
+      "a user with no age" -> (users.withColumn("age", when(col("user_id") =!= 815L, col("age"))), rides),
+      "no rides" -> (users, rides.limit(0)),
+      "no start_time" -> (users, rides.withColumn("start_time", lit(null).cast("timestamp")))
+    ).foreach { case (fixture, (u, r)) =>
+      val edge = tmpDir()
+      u.coalesce(1).write.parquet(s"$edge/users")
+      r.coalesce(1).write.parquet(s"$edge/rides")
+      val served = answers(s"$edge/users", s"$edge/rides").toMap
+      val scanned = withParquetScan(answers(s"$edge/users", s"$edge/rides")).toMap
+      served.foreach { case (name, s) => assert(s == scanned(name), s"$fixture: $name") }
+      val byGender = Endpoints.ridesByGender(spark.read.parquet(s"$edge/users"), spark.read.parquet(s"$edge/rides"), "male")
+      val joins = byGender.queryExecution.analyzed.collect { case j: Join => j }
+      fixture match {
+        case "a repeated user_id" =>
+          assert(joins.nonEmpty, fixture)
+          assert(served("rides_by_gender").length == 3, served)
+        case "no rides" | "no start_time" =>
+          assert(joins.isEmpty, fixture)
+          assert(served("daily").isEmpty, served)
+        case _ =>
+          assert(joins.isEmpty, fixture)
+          assert(served("rides_by_gender").length == 2 && served("daily").nonEmpty, served)
+      }
+    }
   }
 
   test("in-memory, graftlog and streaming tables pass through the served step untouched") {

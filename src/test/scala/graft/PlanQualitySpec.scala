@@ -700,18 +700,26 @@ class PlanQualitySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     // the first request on each handle collects its rows once
     assert(Endpoints.toJsonRecords(Endpoints.allRiders(users)).length == 40)
     assert(Endpoints.toJsonRecords(Endpoints.ridesForRider(rides, 0L)).length == 3)
+    // request -> its record count; the join and the latest day are answered
+    // from held rows too
     Seq(
-      "rideById" -> (() => Endpoints.rideById(rides, 3L)),
-      "riderById" -> (() => Endpoints.riderById(users, 7L)),
-      "ridersByGender" -> (() => Endpoints.ridersByGender(users, "male")),
-      "ridersByAge" -> (() => Endpoints.ridersByAge(users, None, Some(25), Some(30))),
-      "ridesForRider" -> (() => Endpoints.ridesForRider(rides, 7L)),
-      "dailyRides" -> (() => Endpoints.dailyRides(rides, Some((2024, Some(1), Some(2)))))
-    ).foreach { case (name, request) =>
+      "rideById" -> (1, () => Endpoints.rideById(rides, 3L)),
+      "riderById" -> (1, () => Endpoints.riderById(users, 7L)),
+      "ridersByGender" -> (20, () => Endpoints.ridersByGender(users, "male")),
+      "ridersByAge" -> (6, () => Endpoints.ridersByAge(users, None, Some(25), Some(30))),
+      "ridesForRider" -> (3, () => Endpoints.ridesForRider(rides, 7L)),
+      "dailyRides" -> (24, () => Endpoints.dailyRides(rides, Some((2024, Some(1), Some(2))))),
+      "ridesByGender(male)" -> (60, () => Endpoints.ridesByGender(users, rides, "male")),
+      "ridesByGender(female)" -> (60, () => Endpoints.ridesByGender(users, rides, "female")),
+      "ridesByGender(no rider)" -> (0, () => Endpoints.ridesByGender(users, rides, "nonbinary")),
+      "dailyRides(latest day)" -> (24, () => Endpoints.dailyRides(rides, None))
+    ).foreach { case (name, (records, request)) =>
       val (json, jobs) = jobsOf(Endpoints.toJsonRecords(request()))
-      assert(json.nonEmpty, name)
+      assert(json.length == records, name)
       assert(jobs == 0, s"$name ran $jobs job(s) over a served table")
     }
+    val latest = Endpoints.toJsonRecords(Endpoints.dailyRides(rides, None))
+    assert(latest.forall(_.contains("\"start_time\":\"2024-01-05T")), latest)
   }
 
   test("served endpoints: a table over the file-byte or the row cap keeps the parquet scan and its filter") {
@@ -737,6 +745,13 @@ class PlanQualitySpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       // later request on the handle runs only its own scan
       val (json, jobs) = jobsOf(Endpoints.toJsonRecords(Endpoints.riderById(long, 8L)))
       assert(json == Seq("""{"user_id":8}""") && jobs == 1, s"$jobs job(s)")
+      // rides over the row cap: the join with held users stays a join over the scan
+      val users = spark.read.parquet(servingTables()._1)
+      assert(Endpoints.toJsonRecords(Endpoints.allRiders(users)).length == 40)
+      val byGender = Endpoints.ridesByGender(users, long, "male")
+      val joined = physical(byGender)
+      assert(joined.contains("FileScan parquet") && joined.contains("HashJoin"), joined)
+      assert(Endpoints.toJsonRecords(byGender).length == 20)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }
