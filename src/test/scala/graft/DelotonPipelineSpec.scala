@@ -255,10 +255,13 @@ class DelotonPipelineSpec extends SparkSpecBase {
     import org.apache.spark.sql.functions.{lit, when}
     val users = DelotonPipeline.users(raw)
     val rides = DelotonPipeline.rides(raw)
+    val noUserId = lit(null).cast("long")
     Seq(
       "a repeated user_id" -> (users.union(users.filter(col("user_id") === 816L)), rides),
-      "a ride with no user_id" ->
-        (users, rides.union(rides.limit(1).withColumn("ride_id", lit(9L)).withColumn("user_id", lit(null).cast("long")))),
+      // a null key on both sides, which the join never matches
+      "a ride and a male user with no user_id" ->
+        (users.union(users.filter(col("user_id") === 816L).withColumn("user_id", noUserId)),
+          rides.union(rides.limit(1).withColumn("ride_id", lit(9L)).withColumn("user_id", noUserId))),
       "a user with no age" -> (users.withColumn("age", when(col("user_id") =!= 815L, col("age"))), rides),
       "no rides" -> (users, rides.limit(0)),
       "no start_time" -> (users, rides.withColumn("start_time", lit(null).cast("timestamp")))
